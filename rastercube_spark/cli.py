@@ -295,11 +295,12 @@ def cmd_regions(args) -> int:
 def cmd_query_region(args) -> int:
     """Zonal stats for a NAMED region over a cube — the reference's
     notebook one-liner (regions.py:119-130: polygon_for_region → mask →
-    stats) as a CLI verb. Spark shape: catalog polygon → tiny broadcast
-    edge table → relational ray-cast mask (operators/polygon.py, bbox
-    prefilter prunes partitions first) → engine-side aggregate; only the
-    5-number summary reaches the driver."""
+    stats) as a CLI verb. Spark shape: windowed read over the ring's bbox
+    (fractions outside it are never listed or read) → scanline mask
+    (operators/polygon.py: one pushed-down filter) → engine-side
+    aggregate; only the 5-number summary reaches the driver."""
     import json as _json
+    import math
 
     from pyspark.sql import functions as F
 
@@ -313,7 +314,7 @@ def cmd_query_region(args) -> int:
         cat.register_shapefile(base)
     colname, _, regname = args.region.partition(".")
     try:
-        cat.polygon_for_region(args.region)  # validate regspec up front
+        ring = cat.polygon_for_region(args.region)  # validate regspec up front
     except (KeyError, ValueError) as ex:
         print(
             f"query-region: {ex.args[0] if ex.args else ex}", file=sys.stderr
@@ -321,11 +322,17 @@ def cmd_query_region(args) -> int:
         return 2
     cube = _open_cube(args.root)
     spark = _spark()
-    px = cube.df(spark)
-    if args.t is not None:
-        px = px.where(F.col("t") == args.t)
+    # ring bbox → end-exclusive pixel window, clamped to the grid
+    h = cube.header
+    xs, ys = [v[0] for v in ring], [v[1] for v in ring]
+    x0 = min(max(0, math.floor(min(xs))), h.width)
+    y0 = min(max(0, math.floor(min(ys))), h.height)
+    x1 = max(min(h.width, math.ceil(max(xs)) + 1), x0)
+    y1 = max(min(h.height, math.ceil(max(ys)) + 1), y0)
+    t1 = None if args.t is None else args.t + 1
+    px = cube.load_slice_xy(spark, (x0, y0), (x1, y1), args.t, t1)
     inside = points_in_polygon(px, cat.region_df(spark, colname), regname)
-    vcol, nodata = cube.header.value_col, cube.header.nodataval
+    vcol, nodata = h.value_col, h.nodataval
     valid = F.when(F.col(vcol) == nodata, None).otherwise(F.col(vcol))
     row = inside.agg(
         F.count("*").alias("n_px"),

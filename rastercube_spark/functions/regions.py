@@ -6,8 +6,9 @@ vertex lists around — the reference's notebook entry point
 
 Spark-first shape: a catalog is driver-side metadata (a few hundred
 polygons, like the reference's geojson assets); the polygon lands in the
-engine as a tiny broadcast edge/vertex table feeding the relational
-point-in-polygon mask (operators/polygon.py) — never a per-row UDF.
+engine as a tiny vertex table whose ring the scanline point-in-polygon
+mask (operators/polygon.py) collects and turns into one column
+predicate — never a per-row UDF.
 Collections load from geojson or shapefile via sources/vector.py (the
 reference shells out to OGR; the pure-python readers cover its asset
 subset, and both formats share the {name: ring} contract).
@@ -81,8 +82,8 @@ class RegionCatalog:
     def region_df(self, spark: SparkSession, collection: str) -> DataFrame:
         """Whole collection as the region_polygons vertex schema
         (region_name, vertex_idx, vx, vy) consumed by
-        operators/polygon.py — small enough to broadcast by
-        construction (catalog collections are driver-side assets)."""
+        operators/polygon.py — small by construction (catalog
+        collections are driver-side assets)."""
         return polygons_df(spark, self._collection(collection))
 
     def _collection(self, name: str) -> dict[str, Ring]:

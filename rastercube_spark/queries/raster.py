@@ -82,8 +82,9 @@ def qr01(spark, sf_dir):
     """,
 )
 def qr02(spark, sf_dir):
-    """P3/P4 polygon query (reference jgrid/utils.py:27-51): bbox prefilter
-    prunes chunks, relational ray-cast replaces the PIL raster burn."""
+    """P3/P4 polygon query (reference jgrid/utils.py:27-51): the scanline
+    mask replaces the PIL raster burn with one scan-side filter whose bbox
+    bounds prune row groups."""
     px = load(spark, sf_dir, "ndvi_pixels").select("frac_num", "x", "y", "ndvi")
     poly = load(spark, sf_dir, "region_polygons")
     inside = points_in_polygon(px, poly, "poly_4frac")

@@ -12,8 +12,9 @@ are public specs and the polygons are tiny driver-side dimension data, so:
   'C' field). Enough for GDAL/ogrinfo to read what we write.
 
 Polygons land in the engine as the long-form (region_name, vertex_idx,
-vx, vy) relation that operators/polygon.py consumes (broadcast-sized;
-the ray-cast join is the scale path, never the polygon table).
+vx, vy) relation that operators/polygon.py consumes (driver-sized: the
+mask collects one ring; the pixel scan is the scale path, never the
+polygon table).
 """
 
 from __future__ import annotations

@@ -1,12 +1,14 @@
 """Property tests for coordinate math and polygon masking (SURVEY §5.2):
 geo round-trips mirror reference tests/test_jgrid3.py:45-69
-(latlng2xy ∘ xy2latlng ≈ id), frac math invariants, and the relational
-ray-cast vs a pure-python oracle on the concave fixture polygon."""
+(latlng2xy ∘ xy2latlng ≈ id), frac math invariants, and the scanline
+polygon mask vs a pure-python ray cast on the fixture polygon and on
+seeded random rings, plus its degenerate inputs."""
 
 from __future__ import annotations
 
 import math
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from pyspark.sql import functions as F
@@ -144,3 +146,90 @@ def test_polygon_mask_vs_python(spark):
         if _py_point_in_poly(x + 0.5, y + 0.5, verts)
     }
     assert got == want
+
+
+# --- scanline mask properties: random rings, duplicates, degenerate input
+# (frames come from spark.range / pandas-via-Arrow: no Python worker tasks)
+
+_RING_SCHEMA = "region_name string, vertex_idx int, vx double, vy double"
+
+
+def _ring_df(spark, verts, name="r"):
+    import pandas as pd
+
+    rows = [(name, i, float(a), float(b)) for i, (a, b) in enumerate(verts)]
+    cols = ["region_name", "vertex_idx", "vx", "vy"]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=cols), _RING_SCHEMA)
+
+
+def _grid_df(spark, lo: int, n: int, copies: int = 1, x: str = "x", y: str = "y"):
+    """Every (x, y) in [lo, lo+n)², each ``copies`` times."""
+    i = F.col("id") % (n * n)
+    return spark.range(copies * n * n).select(
+        ((i / n).cast("int") + lo).alias(x),
+        ((i % n).cast("int") + lo).alias(y),
+    )
+
+
+def _random_ring(seed: int) -> list[tuple[float, float]]:
+    """3–14 vertices snapped to a 0.5, 0.01 or 1.0 grid (pixel-centre rows
+    hit vertices and horizontal edges exactly); self-intersection allowed."""
+    import random
+
+    rng = random.Random(seed)
+    grid = (0.5, 0.01, 1.0)[seed % 3]
+    verts = [
+        (round(rng.uniform(-4, 36) / grid) * grid, round(rng.uniform(-4, 36) / grid) * grid)
+        for _ in range(rng.randint(3, 14))
+    ]
+    return verts + verts[:1]
+
+
+@pytest.mark.parametrize("seed", range(12))
+def test_scanline_mask_random_rings_vs_python(spark, seed):
+    """Every pixel appears twice: both copies come back or neither, and
+    the kept set is exactly the pure-python ray cast."""
+    from collections import Counter
+
+    from rastercube_spark.operators.polygon import points_in_polygon
+
+    verts = _random_ring(seed)
+    pts = _grid_df(spark, -6, 44, copies=2)
+    got = Counter(tuple(r) for r in points_in_polygon(pts, _ring_df(spark, verts), "r").collect())
+    want = {
+        (x, y): 2
+        for x in range(-6, 38)
+        for y in range(-6, 38)
+        if _py_point_in_poly(x + 0.5, y + 0.5, verts)
+    }
+    assert got == want
+
+
+def test_scanline_mask_degenerate_inputs(spark):
+    from rastercube_spark.operators.polygon import points_in_polygon
+
+    square = [(2.0, 2.0), (8.0, 2.0), (8.0, 8.0), (2.0, 8.0), (2.0, 2.0)]
+    poly = _ring_df(spark, square)
+    pts = _grid_df(spark, 0, 10).withColumn("v", F.col("x") * 100 + F.col("y"))
+    far = _ring_df(spark, [(a + 500.0, b + 500.0) for a, b in square])
+    cases = {
+        "unknown region": points_in_polygon(pts, poly, "nope"),
+        "empty polygon table": points_in_polygon(pts, poly.limit(0), "r"),
+        "empty points": points_in_polygon(pts.limit(0), poly, "r"),
+        "polygon outside extent": points_in_polygon(pts, far, "r"),
+    }
+    for case, df in cases.items():
+        assert df.schema == pts.schema, case
+        assert df.collect() == [], case
+
+    # custom column names; NULL coordinates are never inside
+    nulls = spark.range(3).select(
+        F.when(F.col("id") != 1, None).otherwise(F.lit(4)).cast("int").alias("col"),
+        F.when(F.col("id") != 0, None).otherwise(F.lit(4)).cast("int").alias("row"),
+    )
+    named = _grid_df(spark, 0, 10, x="col", y="row").unionByName(nulls)
+    got = {tuple(r) for r in points_in_polygon(named, poly, "r", x="col", y="row").collect()}
+    want = {
+        (x, y) for x in range(10) for y in range(10) if _py_point_in_poly(x + 0.5, y + 0.5, square)
+    }
+    assert got == want and len(want) == 36

@@ -934,3 +934,47 @@ def test_knn_graph_indexed_member_side_no_exchange(spark, sf_dir, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS b_codes")
+
+
+# --- scanline polygon mask: one pushed-down filter, no join/exchange -----
+
+def _pushed_filters(df) -> str:
+    """The parquet scan's full PushedFilters (the plan string abbreviates
+    scan metadata)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.length())]
+    scans = [s for s in scans if s.nodeName().startswith("Scan parquet")]
+    assert len(scans) == 1
+    return scans[0].metadata().get("PushedFilters").get()
+
+
+# poly_4frac spans x ∈ [28.5, 52.5], y ∈ [30.5, 52.5] → pixel rows/cols
+# whose centre lies in the bbox: x ∈ [28, 52], y ∈ [30, 52]
+_POLY_4FRAC_BOUNDS = (
+    "GreaterThanOrEqual(x,28)", "LessThanOrEqual(x,52)",
+    "GreaterThanOrEqual(y,30)", "LessThanOrEqual(y,52)",
+)
+
+
+def test_polygon_mask_is_one_pushed_filter(spark, sf_dir):
+    df = _QS["qr02_polygon_mask"](spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    # qr02's own GROUP BY and ORDER BY; the mask adds none
+    assert plan.count("Exchange") == 2, plan
+    pushed = _pushed_filters(df)
+    assert all(b in pushed for b in _POLY_4FRAC_BOUNDS), pushed
+
+
+def test_polygon_mask_on_cube_slice(spark):
+    from rastercube_spark.operators.polygon import points_in_polygon
+    from rastercube_spark.queries.raster import _ndvi_cube
+    from rastercube_spark.sources.tables import load
+
+    cube = _ndvi_cube(spark)
+    pts = cube.load_slice_xy(spark, (20, 20), (60, 60), 0, 5)
+    df = points_in_polygon(pts, load(spark, "", "region_polygons"), "poly_4frac")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Exchange" not in plan, plan
+    pushed = _pushed_filters(df)
+    assert all(b in pushed for b in _POLY_4FRAC_BOUNDS), pushed
