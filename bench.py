@@ -499,14 +499,39 @@ def _cpu_mhz() -> float | None:
         return None
 
 
+def _ignores_sigchld(pid: int) -> bool:
+    """True when ``pid`` ignores SIGCHLD, so the kernel reaps its children
+    and their CPU never reaches its cutime."""
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("SigIgn:"):
+                    return bool(int(line.split()[1], 16) >> 16 & 1)
+    except (OSError, ValueError, IndexError):
+        pass
+    return False
+
+
+# PySpark's daemon.py ignores SIGCHLD, and Spark kills a Python worker
+# after a minute idle, so a dead worker's CPU would drop out of the tree
+# total. Children of SIGCHLD-ignoring parents are remembered at their
+# last-seen CPU, keyed by (pid, start time) so a reused pid is a new
+# entry; once one is gone its ticks move to _autoreaped_gone_ticks.
+_autoreaped_live: dict[tuple[int, str], int] = {}
+_autoreaped_gone_ticks = 0
+
+
 def _proc_tree_cpu_s() -> float | None:
     """CPU seconds consumed by THIS process and every live descendant
     (the Spark JVM and its Python workers), plus each one's already-
     reaped children (cutime/cstime — dead workers roll up into their
     parent, so nothing is double-counted: cutime covers only waited-on
-    children, live ones report their own utime)."""
+    children, live ones report their own utime), plus the last-seen CPU
+    of dead children whose parent ignored SIGCHLD."""
+    global _autoreaped_live, _autoreaped_gone_ticks
     tck = os.sysconf("SC_CLK_TCK")
     seen: set[int] = set()
+    autoreaped: dict[tuple[int, str], int] = {}
     queue = [os.getpid()]
     total = 0
     try:
@@ -518,16 +543,24 @@ def _proc_tree_cpu_s() -> float | None:
             try:
                 with open(f"/proc/{pid}/stat") as f:
                     fields = f.read().rsplit(")", 1)[1].split()
-                # fields[11..14] = utime stime cutime cstime (1-indexed
-                # 14-17 of the full line; the comm field may contain
-                # spaces, hence the rsplit on ')')
-                total += sum(int(x) for x in fields[11:15])
+                # fields[11..14] = utime stime cutime cstime, fields[1] =
+                # ppid, fields[19] = start time (1-indexed 14-17, 4 and
+                # 22 of the full line; the comm field may contain spaces,
+                # hence the rsplit on ')')
+                ticks = sum(int(x) for x in fields[11:15])
+                total += ticks
+                if _ignores_sigchld(int(fields[1])):
+                    autoreaped[(pid, fields[19])] = ticks
                 for task in os.listdir(f"/proc/{pid}/task"):
                     with open(f"/proc/{pid}/task/{task}/children") as f:
                         queue.extend(int(c) for c in f.read().split())
             except (OSError, ValueError, IndexError):
                 continue  # pid raced away mid-walk
-        return total / tck
+        _autoreaped_gone_ticks += sum(
+            t for k, t in _autoreaped_live.items() if k not in autoreaped
+        )
+        _autoreaped_live = autoreaped
+        return (total + _autoreaped_gone_ticks) / tck
     except OSError:
         return None
 

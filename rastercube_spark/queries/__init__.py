@@ -6,9 +6,8 @@ covers one block of the surface; each query has a Spark implementation
 DuckDB oracle string.
 """
 
-# Import order is NOT load-bearing: the driver-facing registration order
-# (which selects the 50 queries the driver attests each round) is the
-# explicit registry.ATTEST_FIRST list — rotate it there, not here.
+# Import order is the registration order: registry.queries() and
+# registry.oracle_sql() list the queries module by module in this order.
 from rastercube_spark.queries import (  # noqa: F401
     aggregations,
     datapipe,

@@ -4,6 +4,8 @@ surface (SURVEY.md §2.9).
 Every operator the engine claims is registered here with a Spark callable
 ``(spark, sf_dir) -> DataFrame`` and, when SQL-expressible, the equivalent
 DuckDB oracle SQL. ``__spark_entry__.py`` re-exports these to the driver.
+Both maps keep registration order, which is the import order of
+``rastercube_spark.queries``.
 """
 
 from __future__ import annotations
@@ -17,199 +19,17 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 _QUERIES: dict[str, QueryFn] = {}
 _ORACLES: dict[str, str] = {}
 
-# --- driver-attestation rotation ----------------------------------------
-# The driver's correctness harness attests the FIRST 50 registered queries
-# each round (registration order = dict order returned by queries()).
-# Registration order used to be import order, which was fragile (ADVICE r3:
-# isort would silently reshuffle attestation coverage). It is explicit:
-# ATTEST_CHANGED lists every query whose code or emitted values changed
-# this round (their prior-round attestations are stale), ATTEST_STALE
-# fills the remaining window slots with the queries whose last driver
-# attestation is oldest. Queries in neither keep import order after
-# these, and MUST be code-frozen.
-#
-# The contract is now MECHANICALLY ENFORCED (rounds 3 and 4 both shipped
-# stale attestations; a comment is not a control — VERDICT r04 #3):
-# rastercube_spark/attest.py hashes each query's source CLOSURE (its
-# function, its oracle SQL, and every package function/class it
-# transitively references — so editing operators/asof.py flags
-# q17_asof_join even though queries/joins.py is untouched), and
-# tests/test_attestation.py fails naming any query whose closure hash
-# differs from the recorded baseline (tests/attest_hashes.json) while
-# sitting outside the window and outside ATTEST_EXEMPT. Regenerate the
-# baseline with tests/make_attest.py IN THE SAME COMMIT that rotates
-# these lists; make_attest refuses to run while the rule is violated.
-#
-# --- tiered-rotation policy (VERDICT r13 "Next round" #1) --------------
-# The registry outgrew ad-hoc window bookkeeping: 131 queries share a
-# 50-slot driver window under a 3-round staleness ceiling (a query's
-# latest driver attestation may be at most 2 rounds old when judged).
-# The policy, ENFORCED MECHANICALLY in tests/test_attestation.py
-# (test_rotation_policy_capacity_and_staleness):
-#   tier 1 — changed/new closures ALWAYS attest in their landing round
-#            (ATTEST_CHANGED; the existing closure-hash rule);
-#   tier 2 — code-frozen queries re-attest on a 3-round cycle: every
-#            query whose latest green CORRECTNESS_r* row is 2 rounds
-#            behind the newest recorded round MUST appear in the next
-#            window (ATTEST_STALE head), remaining slots go
-#            oldest-first per tools/rotate_window.py;
-#   capacity — 50 slots × 3-round cycle = 150, minus a 6-slot/round
-#            reserve for tier-1 churn ⇒ the registry is CAPPED AT 144
-#            registered queries (test-enforced). Net-new queries only
-#            land while the cap holds; at 131 (r14, net-new 0) the
-#            contract stays satisfiable indefinitely.
-#
-# Round 15 changed set. The round's first substantive change —
-# rebalance_scan's spread target going byte-derived instead of
-# cores-derived (sources/tables.py, guide §2.2; VERDICT r14 "Next
-# round" #1's over-partitioning fix) — moves the closure hash of all
-# 46 queries that reach it through _docs()/similarity/aggregations.
-# The window cannot hold 46 on top of the MANDATORY 39-query r12
-# staleness cohort, so: the nine changed queries that were already in
-# this window's stale head attest here (tier 1), qf9/qg2 join them
-# (their own plans are reshaped this round), and the remaining 35
-# carry ATTEST_EXEMPT justifications below — the documented
-# shared-helper escape hatch, backed by the full-surface oracle sweep
-# (tests/test_oracle.py re-verifies all 131 queries vs DuckDB on this
-# exact tree in the driver's own VERIFY pytest run).
-ATTEST_CHANGED: tuple[str, ...] = (
-    "q20_tpch_q1_agg",
-    "q96_knn_bruteforce",
-    "qa9_media_knn",
-    "qd3_knn_label_consistency",
-    "qf2_token_surprisal",
-    "qf3_length_histogram",
-    "qf5_boilerplate_ngrams",
-    "qf7_repeated_spans",
-    "qf8_token_budget",
-    "qf9_dup_rate_estimate",
-    "qg2_char_langid",
-    # batch 2: the LSH pair-search family — _lut_rescore's vectorized
-    # id lookup (all three) and the CC-consumer dedup_pairs=False edge
-    # path (qb2/qc0); qb0's own plan keeps the DISTINCT (top-k surface)
-    "qb0_cosine_pairs_lsh",
-    "qb2_semantic_dedup",
-    "qc0_balanced_sample",
-)
-
-# The remaining window slots go oldest-first per tools/
-# rotate_window.py's ground-truth reading of the CORRECTNESS_r*
-# artifacts: FIRST the full thirty-nine-query r12 cohort at the
-# 2-round staleness ceiling (latest green row r12, newest recorded
-# r14 — the tier-2 rule makes this head MANDATORY and
-# test_rotation_policy_capacity_and_staleness enforces it), then the
-# oldest r13-attested queries (planner order: alphabetical within the
-# equal-aged cohort) for the remaining slots. Every ATTEST_CHANGED
-# entry this round displaces one r13 pull-forward from the TAIL of
-# this list (the r12 head must stay intact).
-ATTEST_STALE: tuple[str, ...] = (
-    "q12_sort_merge_join",
-    "q13_left_outer_null",
-    "q14_left_semi",
-    "q15_left_anti",
-    "q16_theta_join",
-    "q18_copartitioned_zip",
-    "q19_range_join",
-    "q21_count_distinct",
-    "q23_cube",
-    "q24_grouping_sets",
-    "q25_having",
-    "q26_zonal_stats",
-    "q27_argmax_gather",
-    "q28_zonal_percentile",
-    "q29_salted_agg",
-    "q63_qa_bitops",
-    "q65_affine_transform",
-    "q75_stream_static_join",
-    "q76_stream_stream_join",
-    "qb5_quality_rules",
-    "qb6_quantized_knn",
-    "qb7_group_sample",
-    "qb8_mixture_upsample",
-    "qb9_dataset_report",
-    "qe2_pq_knn",
-    "qe4_embedding_outliers",
-    "qf1_embedding_dim_stats",
-    "qr02_polygon_mask",
-    "qr06_cube_window_agg",
-    "qr07_resample_downsample",
-    "qr08_reproject_nearest",
-    # r13 pull-forwards (equal-aged; planner's alphabetical order) —
-    # the tail shrinks one entry per ATTEST_CHANGED addition
-    "q01_scan_count",
-    "q02_project_filter",
-    "q03_in_null_predicates",
-    "q17_asof_join",
-    "q22_rollup",
-)
-
-ATTEST_FIRST: tuple[str, ...] = ATTEST_CHANGED + ATTEST_STALE
-
-# Closure-hash changes NOT rotated into the window, each with its
-# justification — the auditable escape hatch for shared-helper edits
-# that would otherwise force rotating the entire surface. r15: the
-# byte-derived rebalance_scan spread (sources/tables.py) reaches 46
-# query closures through the shared _docs()/corpus-scan helpers; the
-# window holds the 11 it can (ATTEST_CHANGED above) and these carry
-# the exemption. The change is PARTITIONING-ONLY — the repartition
-# width of a scan-side spread; no expression, filter, aggregation or
-# ordering changed — and every exempted query's values are re-verified
-# against the DuckDB oracle on this exact tree by the full-surface
-# sweep in tests/test_oracle.py (part of the driver's VERIFY pytest
-# run), so the exemption defers the DRIVER's re-attestation, not the
-# value check.
-_R15_REBALANCE_EXEMPT_REASON = (
-    "r15 rebalance_scan byte-derived spread width (sources/tables.py): "
-    "partitioning-only shared-helper change, values oracle-verified by "
-    "the full tests/test_oracle.py sweep on this tree; window capacity "
-    "held by the mandatory 39-query r12 staleness cohort"
-)
-ATTEST_EXEMPT: dict[str, str] = {
-    name: _R15_REBALANCE_EXEMPT_REASON
-    for name in (
-        "q90_text_metrics",
-        "q91_exact_dedup",
-        "q92_minhash_lsh_pairs",
-        "q93_lsh_jaccard",
-        "q94_ngram_jaccard_topk",
-        "q95_simhash",
-        "q99_winnow_fingerprint",
-        "qa0_multimodal_decode",
-        "qa1_tfidf_topterms",
-        "qa3_dup_clusters",
-        "qa4_dedup_keep",
-        "qa5_repetition_filters",
-        "qa6_sequence_packing",
-        "qa7_pii_redaction",
-        "qa8_frame_sample",
-        "qb1_decontaminate",
-        "qb4_passage_dedup",
-        "qd1_incremental_dedup",
-        "qd2_temperature_mixture",
-        "qd4_neardup_decontaminate",
-        "qd5_token_drift",
-        "qd6_ngram_novelty",
-        "qd8_snapshot_overlap",
-        "qd9_dedup_keep_best",
-        "qe1_containment_audit",
-        "qe3_source_overlap",
-        "qe5_bm25_topk",
-        "qf4_hybrid_rrf",
-        "qg0_semantic_decontaminate",
-        "qg1_chunk_documents",
-        "qg3_template_prefixes",
-        "qg4_source_dup_matrix",
-        "qg5_source_score_percentiles",
-        "qg6_code_detect",
-        "qg7_dup_cluster_histogram",
-    )
-}
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a query implementation and (optionally) its oracle SQL."""
+    """Register a query implementation and (optionally) its oracle SQL.
+
+    A name registers once: a second ``@query(name)`` raises ``ValueError``
+    instead of silently replacing the first.
+    """
 
     def deco(fn: QueryFn) -> QueryFn:
+        if name in _QUERIES:
+            raise ValueError(f"query {name!r} is already registered")
         _QUERIES[name] = fn
         if oracle is not None:
             _ORACLES[name] = oracle
@@ -223,17 +43,11 @@ def _load_all() -> None:
     import rastercube_spark.queries  # noqa: F401
 
 
-def _ordered(names: dict) -> list[str]:
-    head = [n for n in ATTEST_FIRST if n in names]
-    rest = [n for n in names if n not in set(ATTEST_FIRST)]
-    return head + rest
-
-
 def queries() -> dict[str, QueryFn]:
     _load_all()
-    return {n: _QUERIES[n] for n in _ordered(_QUERIES)}
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     _load_all()
-    return {n: _ORACLES[n] for n in _ordered(_ORACLES)}
+    return dict(_ORACLES)

@@ -256,6 +256,45 @@ def test_bench_cpu_accounting_sees_children_and_reaped():
     assert b0 is not None and b0 > 0
 
 
+def test_bench_cpu_accounting_keeps_autoreaped_grandchild():
+    """PySpark's worker daemon ignores SIGCHLD, so its dead workers never
+    reach its cutime. A grandchild under such a parent must keep counting
+    after it exits (Spark kills idle workers mid-session)."""
+    import subprocess
+    import sys as _sys
+    import time as _time
+
+    import bench
+
+    parent = subprocess.Popen(
+        [_sys.executable, "-c",
+         "import os, signal, sys\n"
+         "signal.signal(signal.SIGCHLD, signal.SIG_IGN)\n"
+         "if os.fork() == 0:\n"
+         "    [sum(range(2_000_000)) for _ in range(40)]\n"
+         "    os._exit(0)\n"
+         "sys.stdin.read()\n"],
+        stdin=subprocess.PIPE,
+    )
+    try:
+        t0 = bench._proc_tree_cpu_s()
+        _time.sleep(1.0)
+        live = bench._proc_tree_cpu_s() - t0
+        assert live >= 0.5, f"live grandchild CPU not seen ({live:.2f}s)"
+        children = f"/proc/{parent.pid}/task/{parent.pid}/children"
+        deadline = _time.time() + 60
+        while _time.time() < deadline:
+            with open(children) as f:
+                if not f.read().strip():
+                    break
+            _time.sleep(0.1)
+        gone = bench._proc_tree_cpu_s() - t0
+        assert gone >= live - 0.1, "auto-reaped grandchild's CPU vanished"
+    finally:
+        parent.stdin.close()
+        parent.wait()
+
+
 def test_bench_compact_line_fits_driver_window():
     """The driver's artifact keeps only the LAST 2000 chars of bench
     stdout; r9's full line outgrew it and the round's BENCH artifact

@@ -1,28 +1,31 @@
-"""Attestation-window guard: the driver attests the first 50 registered
-queries, so registry.ATTEST_FIRST must stay valid — every name real, no
-duplicates, exactly the window size, and actually first in queries()."""
+"""Registry guards: the driver zips queries() with oracle_sql(), every
+oracle belongs to a registered query, and a name registers only once."""
 
 from __future__ import annotations
 
+import pytest
+
 from rastercube_spark import registry
-
-DRIVER_WINDOW = 50
-
-
-def test_attest_first_is_valid():
-    names = registry.queries()
-    assert len(registry.ATTEST_FIRST) == DRIVER_WINDOW
-    assert len(set(registry.ATTEST_FIRST)) == len(registry.ATTEST_FIRST)
-    missing = [n for n in registry.ATTEST_FIRST if n not in names]
-    assert not missing, f"ATTEST_FIRST names not registered: {missing}"
-
-
-def test_window_order_applied():
-    head = list(registry.queries())[:DRIVER_WINDOW]
-    assert head == list(registry.ATTEST_FIRST)
 
 
 def test_oracle_order_consistent():
     # oracle_sql() must present the same relative order (driver zips them)
     q = [n for n in registry.queries() if n in registry.oracle_sql()]
     assert q == list(registry.oracle_sql())
+
+
+def test_every_oracle_has_a_query():
+    orphans = set(registry.oracle_sql()) - set(registry.queries())
+    assert not orphans, f"oracle SQL without a registered query: {orphans}"
+
+
+def test_duplicate_name_raises():
+    name = "zz_test_duplicate_registration"
+    registry.queries()  # load the real surface first
+    try:
+        registry.query(name)(lambda spark, sf_dir: None)
+        with pytest.raises(ValueError, match=name):
+            registry.query(name)(lambda spark, sf_dir: None)
+    finally:
+        registry._QUERIES.pop(name, None)
+    assert name not in registry.queries()

@@ -22,8 +22,8 @@ raise, and that raise requires an explicit, per-query
         --accept-regression qb2_semantic_dedup "driver finish traded for X"
 
 whose reason (plus old/new) lands in PERF_BUDGET.json's
-``accepted_regressions`` — the same refuse-while-violated discipline as
-tests/make_attest.py. Medians at or under the committed budget keep it
+``accepted_regressions``: the script refuses to write while the rule is
+violated. Medians at or under the committed budget keep it
 (or tighten it, damped so a lucky-low session cannot re-base the gate
 below what honest sessions measure); first-time budgets need no flag.
 
@@ -66,7 +66,7 @@ NOISE_REL = 1.3
 
 # Session-calibration cap (r11). Measured on 2026-08-15: an idle-gated,
 # clean_end-true sf0.01 session read a UNIFORM 1.33× over the committed
-# medians across all 61 queries — including attestation-frozen closures,
+# medians across all 61 queries — including ones whose code had not changed,
 # with core MHz pinned at 2100 — and three consecutive regeneration
 # attempts refused on 2-11 marginal overruns whose membership CHANGED
 # per run (docs/PERF_NOTES.md r11). That is whole-box throughput drift
