@@ -136,3 +136,43 @@ def test_spark_submit_pyfiles_smoke(tmp_path):
     )
     assert out.returncode == 0, (out.stdout + out.stderr)[-3000:]
     assert "SUBMITOK" in out.stdout, out.stdout[-2000:]
+
+
+def test_out_of_package_imports_resolve():
+    """The scripts around the package — the benchmark (``perfbench/``,
+    ``bench.py``), ``tools/*.py`` and the driver entry point — import
+    package names, many of them inside functions where nothing imports
+    them until that code path runs. Every ``from rastercube_spark…
+    import name`` there must resolve, so a rename inside the package
+    breaks this test instead of silently breaking a benchmark leg."""
+    import ast
+    import glob
+    import importlib
+
+    paths = [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+    for d in ("tools", "perfbench"):
+        paths += sorted(glob.glob(os.path.join(REPO, d, "*.py")))
+    resolved, missing = 0, []
+    for path in paths:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 0
+                and (node.module or "").split(".")[0] == "rastercube_spark"
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                if hasattr(mod, alias.name):
+                    resolved += 1
+                    continue
+                try:  # a submodule not yet imported by its package
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                    resolved += 1
+                except ImportError:
+                    rel = os.path.relpath(path, REPO)
+                    missing.append(f"{rel}:{node.lineno} {node.module}.{alias.name}")
+    assert not missing, missing
+    assert resolved > 50, resolved

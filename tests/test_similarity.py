@@ -6,12 +6,19 @@ also asserted: an 'approximate' method that scans everything is broken.
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from rastercube_spark.operators.similarity import (
+    _FETCH_BROADCAST_BYTES,
+    blocked_cosine_pairs,
     brute_force_knn,
     ivf_knn,
+    lsh_cosine_pairs,
     lsh_knn,
+    quantized_knn,
+    semantic_dedup,
 )
 from rastercube_spark.sources.tables import load
 
@@ -66,28 +73,24 @@ def test_ann_recall_and_candidate_reduction(spark, sf_dir):
 
 def test_ivf_lists_balanced(spark, sf_dir):
     """The coarse quantizer must not collapse (all vectors in one list) —
-    that would silently turn IVF into brute force. Checked for BOTH the
-    untrained placeholder and the trained quantizer qa2 ships."""
+    that would silently turn IVF into brute force. Checked for the
+    trained quantizer qa2 ships (also ivf_knn's default)."""
     from rastercube_spark.operators.similarity import (
         ivf_assign,
-        ivf_centroids,
         train_ivf_centroids,
     )
 
     e = load(spark, sf_dir, "embeddings")
-    for cents in (
-        ivf_centroids(64, 16),
-        train_ivf_centroids(e, dim=64, n_cents=16, n_iters=3),
-    ):
-        sizes = (
-            e.select(ivf_assign(F.col("embedding"), cents).alias("cid"))
-            .groupBy("cid")
-            .count()
-            .collect()
-        )
-        n = sum(r["count"] for r in sizes)
-        assert len(sizes) >= 8, "fewer than half the inverted lists are used"
-        assert max(r["count"] for r in sizes) < 0.5 * n, "one list dominates"
+    cents = train_ivf_centroids(e, dim=64, n_cents=16, n_iters=3)
+    sizes = (
+        e.select(ivf_assign(F.col("embedding"), cents).alias("cid"))
+        .groupBy("cid")
+        .count()
+        .collect()
+    )
+    n = sum(r["count"] for r in sizes)
+    assert len(sizes) >= 8, "fewer than half the inverted lists are used"
+    assert max(r["count"] for r in sizes) < 0.5 * n, "one list dominates"
 
 
 def test_lsh_pairs_recall_vs_exact(spark, sf_dir):
@@ -547,6 +550,17 @@ def test_ivfpq_persisted_index_bit_identical(spark, sf_dir, tmp_path):
     assert len(persisted) > 0
 
 
+def test_ivfpq_probe_rejects_mismatched_codebooks():
+    """The probe's LUT shape comes from the codebooks, so parameters
+    that disagree with them are refused before any work is planned."""
+    from rastercube_spark.operators.similarity import ivfpq_probe
+
+    codebooks = (np.zeros((16, 32, 4)), np.ones((16, 32)))
+    for kw in ({"n_cents": 16}, {"m": 8}):
+        with pytest.raises(ValueError, match="do not match"):
+            ivfpq_probe(None, None, None, [], codebooks, dim=64, **kw)
+
+
 def test_embedding_dim_stats_flags_planted_dead_dim(spark):
     """qf1's operator contract: a planted constant dimension must flag
     low_variance (and only it); mean_q is exact for a constructed
@@ -796,3 +810,81 @@ def test_knn_graph_stats_persisted_index_bit_identical(spark, sf_dir, tmp_path):
     enc_s, meta_s = load_ann_index(spark, slim)
     with pytest.raises(ValueError, match="store_vectors"):
         knn_graph_stats(e, dim=64, index=(enc_s, meta_s))
+
+
+# --- degenerate inputs across the ANN family -----------------------------
+
+_DIM = 8
+_CENTS = np.random.RandomState(5).randn(4, _DIM).tolist()
+# above-gate corpus_rows: the keyed vector-fetch join side of the rescore
+_BIG = _FETCH_BROADCAST_BYTES // (_DIM * 8) + 1
+_KNN = {
+    "brute_force_knn": lambda q, c: brute_force_knn(q, c, k=3),
+    "ivf_knn": lambda q, c: ivf_knn(
+        q, c, _DIM, k=3, n_cents=4, nprobe=2, cents=_CENTS
+    ),
+    "ivf_knn_trained": lambda q, c: ivf_knn(q, c, _DIM, k=3, n_cents=4, nprobe=2),
+    "lsh_knn": lambda q, c: lsh_knn(q, c, _DIM, k=3),
+    "quantized_knn": lambda q, c: quantized_knn(q, c, k=3),
+}
+_PAIRS = {
+    "lsh_cosine_pairs_lut": lambda c, n: lsh_cosine_pairs(
+        c, _DIM, 0.5, k=None, corpus_rows=n
+    ),
+    "lsh_cosine_pairs_join": lambda c, n: lsh_cosine_pairs(
+        c, _DIM, 0.5, k=None, corpus_rows=_BIG
+    ),
+    "blocked_cosine_pairs": lambda c, n: blocked_cosine_pairs(c),
+    "semantic_dedup_exact": lambda c, n: semantic_dedup(
+        c, _DIM, 0.5, exact_below=n + 1, n_rows=n
+    ),
+    "semantic_dedup_lsh": lambda c, n: semantic_dedup(
+        c, _DIM, 0.5, exact_below=0, n_rows=n
+    ),
+}
+# (corpus rows, query rows), ids 0..n-1: a one-row corpus is queried by
+# its own row, whose self-match every kNN path excludes
+_SHAPES = {
+    "empty_corpus": (0, 2),
+    "one_row_corpus": (1, 1),
+    "empty_queries": (6, 0),
+}
+
+
+def _vectors(spark, n, id_col, vec_col):
+    return spark.range(n).select(
+        F.col("id").alias(id_col),
+        F.array(
+            *[F.sin(F.col("id") * 7 + j).cast("float") for j in range(_DIM)]
+        ).alias(vec_col),
+    )
+
+
+@pytest.mark.parametrize(
+    "fn,shape",
+    [(f, s) for f in _KNN for s in _SHAPES]
+    + [(f, s) for f in _PAIRS for s in ("empty_corpus", "one_row_corpus")],
+)
+def test_ann_degenerate_inputs(spark, fn, shape):
+    """Empty corpus, one-row corpus and empty query set give empty
+    results (semantic_dedup: every corpus row is its own keeper) on both
+    sides of the LUT-rescore and exact↔LSH gates; the one refusal is a
+    trainer sampled below ``n_cents``. The empty corpus on the
+    LUT-gated rescore checks that its driver-side norms accept a 0-row
+    collect."""
+    n_corpus, n_queries = _SHAPES[shape]
+    corpus = _vectors(spark, n_corpus, "vec_id", "embedding")
+    if fn in _PAIRS:
+        rows = _PAIRS[fn](corpus, n_corpus).collect()
+        if fn.startswith("semantic_dedup"):
+            assert sorted(r["vec_id"] for r in rows) == list(range(n_corpus))
+            assert all(r["keeper"] for r in rows)
+        else:
+            assert rows == []
+        return
+    queries = _vectors(spark, n_queries, "q_id", "q_vec")
+    if fn == "ivf_knn_trained" and n_corpus < 4:
+        with pytest.raises(ValueError, match="n_cents"):
+            _KNN[fn](queries, corpus)
+        return
+    assert _KNN[fn](queries, corpus).collect() == []
