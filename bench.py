@@ -303,9 +303,11 @@ def _env_note() -> dict:
     start is the strongest confounder on a shared 32-core box."""
     import platform
 
+    from rastercube_spark.session import local_cores
+
     note = {
         "python": platform.python_version(),
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "cpus": str(local_cores()),
     }
     try:
         import pyspark

@@ -187,8 +187,10 @@ def _ndvi_cube(spark):
     Idempotent AND concurrency-safe: the build lands in a scratch dir and
     is committed with one atomic rename; a concurrent builder either wins
     the rename or reads the winner's cube. The header sidecar only exists
-    in committed cubes. Grid geometry per FIXTURES.md: 160x120, frac
-    20x20, 11 dates, frac_ndates 5."""
+    in committed cubes. A committed cube whose header does not record the
+    ``qa`` column predates recorded columns; reading it with its declared
+    schema would drop ``qa``, so it is moved aside and rebuilt. Grid
+    geometry per FIXTURES.md: 160x120, frac 20x20, 11 dates, frac_ndates 5."""
     import os
     import shutil
     import uuid
@@ -196,7 +198,15 @@ def _ndvi_cube(spark):
     from rastercube_spark.sources.raster import CubeHeader, RasterCube
 
     if os.path.exists(f"{_CUBE_ROOT}/header.json"):
-        return RasterCube.open(_CUBE_ROOT)
+        cube = RasterCube.open(_CUBE_ROOT)
+        if "qa" in (name for name, _ in cube.header.columns):
+            return cube
+        stale = f"{_CUBE_ROOT}.stale-{uuid.uuid4().hex[:8]}"
+        try:
+            os.rename(_CUBE_ROOT, stale)
+        except OSError:
+            pass  # another builder moved it first
+        shutil.rmtree(stale, ignore_errors=True)
     header = CubeHeader(
         width=160,
         height=120,

@@ -12,7 +12,14 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def local_cores() -> int:
+    """Cores for the local master: ``SPARK_GRAFT_CPUS`` if set, else the
+    CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = local_cores()
 
 
 def get_spark(
@@ -25,7 +32,6 @@ def get_spark(
     On a real cluster, only ``master`` and sizing confs change; the
     semantic confs (AQE, Arrow, UTC, partition-overwrite) stay.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.adaptive.enabled", "true")
@@ -58,7 +64,7 @@ def get_spark(
         # is correct: size it at submit time there. Parameterised for
         # the cluster case; the local default leaves >100 GiB of the
         # sandbox for Python workers and the OS page cache.
-        builder = builder.master(f"local[{cpus}]").config(
+        builder = builder.master(f"local[{local_cores()}]").config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
         )

@@ -105,11 +105,7 @@ def _decode_long(
                 )
 
     binary = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-    schema = (
-        "frac_num int, time_chunk int, x int, y int, t int, "
-        f"{value_col} {_spark_type(dtype)}"
-    )
-    return binary.mapInPandas(decode, schema)
+    return binary.mapInPandas(decode, h.long_schema)
 
 
 def ingest_tiles(
@@ -161,17 +157,6 @@ def reload_fraction(
         .partitionBy("frac_num", "time_chunk")
         .parquet(cube.data_path)
     )
-
-
-def _spark_type(np_dtype: str) -> str:
-    return {
-        "int16": "smallint",
-        "int32": "int",
-        "int64": "bigint",
-        "uint16": "int",
-        "float32": "float",
-        "float64": "double",
-    }[str(np_dtype)]
 
 
 # --- minimal GeoTIFF writer (TIFF 6.0 + GeoTIFF 1.0 public specs) -------

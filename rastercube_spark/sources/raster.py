@@ -9,11 +9,13 @@ rastercube/jgrid/jgrid3.py:100-205 Header, 429-586 write/slice API):
   partition pruning replaces its hand-rolled fraction-file selection.
 - **header**: JSON sidecar ``{root}/header.json`` mirroring jgrid3's
   Header fields (width/height/frac geometry/timestamps/nodata/geot/WKT).
-- **reads**: windowed / temporal queries *generate prune predicates*
-  (``frac_num IN (...) AND time_chunk IN (...)``) from the header's pure
-  python frac math (reference jgrid3.py:459-489), so Catalyst prunes
-  partition directories before any IO; x/y/t residual predicates push into
-  parquet row-group stats.
+- **reads**: the schema comes from the header (its recorded stored
+  columns plus the two partition columns), so opening the cube runs no
+  parquet schema-inference job. Windowed / temporal queries *generate
+  prune predicates* (``frac_num IN (...) AND time_chunk IN (...)``) from
+  the header's pure python frac math (reference jgrid3.py:459-489), so
+  Catalyst prunes partition directories before any IO; x/y/t residual
+  predicates push into parquet row-group stats.
 - **append**: idempotent time-append (D2, reference
   scripts/complete_ndvi_worldgrid.py:59-186) via dynamic partition
   overwrite — only the trailing/new ``time_chunk`` partitions are
@@ -39,9 +41,37 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
+# numpy dtype → the Spark type its parquet column reads back as; unsigned
+# types widen to the next signed type, as Spark's parquet reader does
+SPARK_TYPES = {
+    "int8": "tinyint",
+    "uint8": "smallint",
+    "int16": "smallint",
+    "uint16": "int",
+    "int32": "int",
+    "int64": "bigint",
+    "float32": "float",
+    "float64": "double",
+}
+
+PARTITION_COLUMNS = (("frac_num", "int"), ("time_chunk", "int"))
+
+
+def _ddl(columns) -> str:
+    return ", ".join(f"`{name}` {typ}" for name, typ in columns)
+
+
 @dataclass
 class CubeHeader:
-    """Grid metadata ≡ reference jgrid3.Header (jgrid3.py:100-205)."""
+    """Grid metadata ≡ reference jgrid3.Header (jgrid3.py:100-205).
+
+    ``columns`` lists the stored non-partition columns as
+    ``[name, Spark DDL type]`` pairs, in file order. It defaults to
+    ``x, y, t int`` plus ``value_col`` typed from ``dtype``;
+    :meth:`RasterCube.write_long` replaces it with the columns it actually
+    wrote (e.g. an extra ``qa`` column). Reads declare ``read_schema``
+    instead of inferring one from parquet footers.
+    """
 
     width: int
     height: int
@@ -55,12 +85,33 @@ class CubeHeader:
     sr_wkt: str = ""
     value_col: str = "value"
     meta: dict = field(default_factory=dict)
+    columns: list[list[str]] | None = None
 
     def __post_init__(self) -> None:
         assert self.width % self.frac_width == 0
         assert self.height % self.frac_height == 0
         if self.frac_ndates is None:
             self.frac_ndates = max(len(self.timestamps_ms), 1)
+        if self.columns is None:
+            self.columns = self.pixel_columns()
+
+    # --- schema ----------------------------------------------------------
+    def pixel_columns(self) -> list[list[str]]:
+        """The stored columns of a plain pixel cube: x, y, t, value."""
+        value_type = SPARK_TYPES[str(self.dtype)]
+        return [["x", "int"], ["y", "int"], ["t", "int"], [self.value_col, value_type]]
+
+    @property
+    def long_schema(self) -> str:
+        """DDL of the long pixel rows the cube's own writers build:
+        partition columns first, then ``pixel_columns``."""
+        return _ddl([*PARTITION_COLUMNS, *self.pixel_columns()])
+
+    @property
+    def read_schema(self) -> str:
+        """DDL the cube reads with: the stored columns (all nullable),
+        then the partition columns — the schema Spark would infer."""
+        return _ddl([*self.columns, *PARTITION_COLUMNS])
 
     # --- fraction math (reference jgrid3.py:278-306) -------------------
     @property
@@ -141,6 +192,7 @@ class CubeHeader:
                 "sr_wkt": self.sr_wkt,
                 "value_col": self.value_col,
                 "meta": self.meta,
+                "columns": self.columns,
             },
             indent=2,
         )
@@ -203,7 +255,7 @@ class RasterCube:
         }
         import pandas as pd
 
-        return spark.createDataFrame(pd.DataFrame(flat))
+        return spark.createDataFrame(pd.DataFrame(flat), schema=h.long_schema)
 
     def write_long(
         self, spark: SparkSession, df: DataFrame, zorder: bool = False
@@ -218,6 +270,9 @@ class RasterCube:
         fractions (many row groups per file), 2-D window reads then prune
         row groups on the z column's min/max stats instead of scanning the
         full fraction. Read results are identical either way.
+
+        The header records ``df``'s non-partition columns as the cube's
+        stored columns (schema analysis only; no job runs).
         """
         from rastercube_spark.functions.zorder import z_index
 
@@ -243,22 +298,19 @@ class RasterCube:
             .partitionBy("frac_num", "time_chunk")
             .parquet(self.data_path)
         )
+        parts = {name for name, _ in PARTITION_COLUMNS}
+        self.header.columns = [
+            [f.name, f.dataType.simpleString()]
+            for f in df.schema.fields
+            if f.name not in parts
+        ]
         self.save_header()
 
     def write_arrays(self, spark: SparkSession, data: np.ndarray) -> None:
         """Full-grid write (S10; reference jgrid3.py:444-457 write_all).
         One output file per (frac_num, time_chunk) partition."""
         assert data.shape[2] == self.header.ndates
-        df = self._long_df(spark, data)
-        (
-            df.repartition("frac_num", "time_chunk")
-            .sortWithinPartitions("frac_num", "time_chunk", "y", "x", "t")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("frac_num", "time_chunk")
-            .parquet(self.data_path)
-        )
-        self.save_header()
+        self.write_long(spark, self._long_df(spark, data))
 
     def append_dates(
         self,
@@ -291,7 +343,7 @@ class RasterCube:
         first = touched[0]
         if first * h.frac_ndates < t_offset:
             existing = (
-                spark.read.parquet(self.data_path)
+                self.df(spark)
                 .where(F.col("time_chunk") == first)
                 .select(*new_df.columns)
             )
@@ -325,9 +377,7 @@ class RasterCube:
 
         h = self.header
         last_chunk = (h.ndates - 1) // h.frac_ndates
-        tail = spark.read.parquet(self.data_path).where(
-            F.col("time_chunk") >= last_chunk
-        )
+        tail = self.df(spark).where(F.col("time_chunk") >= last_chunk)
         overgrown = tail.where(F.col("t") >= h.ndates)
         # partition inventories are catalog-sized (one row per partition)
         # and MUST be collected before the write below mutates the files
@@ -371,7 +421,8 @@ class RasterCube:
 
     # --- read ----------------------------------------------------------
     def df(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.data_path)
+        """The whole cube, read with the header's declared schema."""
+        return spark.read.schema(self.header.read_schema).parquet(self.data_path)
 
     def load_slice_xy(
         self,

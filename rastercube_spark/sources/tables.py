@@ -4,11 +4,19 @@ The only scan primitive the relational layer needs: a parquet read, so
 Catalyst gets predicate pushdown / column pruning / partition pruning for
 free (SURVEY.md §4). Mirrors the reference's catalog-open (S1,
 jgrid3.py:675-680) collapsing to `spark.read.parquet`.
+
+A bare ``spark.read.parquet`` runs one Spark job to read footers and
+infer the schema. Each table file's schema is inferred once per process
+and declared on later loads; the cache key holds the file's size and
+mtime, so a rewritten file is inferred afresh.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -36,9 +44,24 @@ FIXTURE_TABLES = (
 )
 
 
+# (path, size, mtime_ns) → the schema Spark inferred for that file
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name in FIXTURE_TABLES:
-        return spark.read.parquet(f"{FIXTURES_DIR}/{name}.parquet")
+        return _read(spark, fixture_path(name))
     if name == "events":
         # The driver's events.parquet stores ts as parquet TIMESTAMP(NANOS).
         # Spark version behavior differs:
@@ -53,12 +76,12 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql.types import LongType
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = _read(spark, f"{sf_dir}/events.parquet")
         if isinstance(df.schema["ts"].dataType, LongType):
             return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         # session tz is UTC, so NTZ → TIMESTAMP keeps the wall-clock value
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read(spark, f"{sf_dir}/{name}.parquet")
 
 
 def fixture_path(name: str) -> str:
@@ -126,8 +149,6 @@ def rebalance_scan(
     conservative); the quiet case — many tiny files packed into few
     partitions — is the production shape where rebalance was a
     deliberate no-op anyway."""
-    import os
-
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism
     files = df.inputFiles()
@@ -170,8 +191,6 @@ def table_rows(sf_dir: str, name: str) -> int:
     same number comes from catalog statistics
     (``ANALYZE TABLE``/Delta stats); this is the no-catalog equivalent.
     """
-    import os
-
     import pyarrow.parquet as pq
 
     if name in FIXTURE_TABLES:

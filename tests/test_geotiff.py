@@ -250,6 +250,38 @@ def test_ingest_geotiff_tiles(spark, source, tmp_path):
     np.testing.assert_array_equal(got, full)
 
 
+def test_ingest_uint8_geotiff_tiles(spark, tmp_path):
+    """A GLCF-style uint8 cube (the default dtype of glcf_cube_header)
+    ingests from GeoTIFF tiles and reads back value-exact, 255 included."""
+    from rastercube_spark.sources.geotiff import geotiff_tile_codec
+
+    rng = np.random.RandomState(8)
+    full = rng.randint(0, 256, size=(20, 40, 2)).astype(np.uint8)
+    full[0, 0, :] = 255
+    tile_dir = tmp_path / "u8_tiles"
+    tile_dir.mkdir()
+    for t in range(2):
+        write_geotiff(str(tile_dir / f"tile_0_0_t{t}.tif"), full[:, :, t], GEOT, nodataval=0)
+    cube = RasterCube(
+        str(tmp_path / "cube_u8"),
+        CubeHeader(
+            width=40,
+            height=20,
+            frac_width=20,
+            frac_height=20,
+            dtype="uint8",
+            nodataval=0,
+            frac_ndates=2,
+            timestamps_ms=[0, 1],
+            geot=GEOT,
+        ),
+    )
+    ingest_tiles(spark, cube, f"{tile_dir}/*", codec=geotiff_tile_codec)
+    got = cube.load_slice_array(spark, (0, 0), (40, 20))
+    assert got.dtype == np.uint8
+    np.testing.assert_array_equal(got, full)
+
+
 def test_ingest_geotiff_tiled_layout(spark, source, tmp_path):
     """Golden: ingest TILE-organized GeoTIFFs (16×16 tiles, mixed plain/
     gzipped) == the .npy ingest — the qr-family's cube contents are
