@@ -43,8 +43,11 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        # Idempotent re-runs of cube appends overwrite only touched
-        # partitions (reference idempotence: complete_ndvi_worldgrid).
+        # An "overwrite" of a partitioned table replaces only the
+        # partitions the new rows touch. The one engine writer that still
+        # runs under this session default is similarity.save_ann_index's
+        # partitionBy("cid") codes write; the cube's Spark writers set
+        # their mode per write, and its numpy writers do not use Spark.
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # ~128 MB scan splits, mirroring the reference's one-fraction ≈
         # one-HDFS-block layout target (grids.py:115-123).

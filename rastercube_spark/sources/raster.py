@@ -16,29 +16,41 @@ rastercube/jgrid/jgrid3.py:100-205 Header, 429-586 write/slice API):
   the header's pure python frac math (reference jgrid3.py:459-489), so
   Catalyst prunes partition directories before any IO; x/y/t residual
   predicates push into parquet row-group stats.
+- **writes**: numpy in → one parquet file per partition, written from
+  the driver with pyarrow (no Spark job), the way jgrid3 writes one
+  ``.jdata`` file per chunk (jgrid3.py:307-308); DataFrame in → Spark's
+  writer (``write_long``, GeoTIFF ingest, repairs).
 - **append**: idempotent time-append (D2, reference
-  scripts/complete_ndvi_worldgrid.py:59-186) via dynamic partition
-  overwrite — only the trailing/new ``time_chunk`` partitions are
-  rewritten, and re-running the same append is a no-op.
+  scripts/complete_ndvi_worldgrid.py:59-186) — only the trailing/new
+  ``time_chunk`` partitions are rewritten, each staged outside ``data/``
+  and swapped in by directory rename, and re-running the same append is
+  a no-op.
 
 Scale notes (100 TB): fraction geometry is the sizing knob, exactly as in
 the reference (grids.py:115-123 one fraction ≈ one HDFS block): pick
 ``frac_width/frac_height/frac_ndates`` so one (frac_num, time_chunk)
-partition holds ~128 MB. Writes repartition on the partition key so each
-task writes one partition file (no small-file explosion); reads never list
-more partitions than the prune set.
+partition holds ~128 MB. Every writer leaves one file per partition (no
+small-file explosion); the numpy writers hold one partition's rows on the
+driver at a time; reads never list more partitions than the prune set.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
+import shutil
 from dataclasses import dataclass, field
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 # numpy dtype → the Spark type its parquet column reads back as; unsigned
@@ -103,7 +115,7 @@ class CubeHeader:
 
     @property
     def long_schema(self) -> str:
-        """DDL of the long pixel rows the cube's own writers build:
+        """DDL of the long pixel rows the GeoTIFF decoder builds:
         partition columns first, then ``pixel_columns``."""
         return _ddl([*PARTITION_COLUMNS, *self.pixel_columns()])
 
@@ -204,6 +216,15 @@ class CubeHeader:
         return cls(**d)
 
 
+def _part(base: str, frac: int, chunk: int) -> str:
+    return os.path.join(base, f"frac_num={frac}", f"time_chunk={chunk}")
+
+
+def _move(src: str, dst: str) -> None:
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    os.rename(src, dst)
+
+
 class RasterCube:
     """Parquet-backed chunked raster cube (see module docstring)."""
 
@@ -230,32 +251,103 @@ class RasterCube:
             return cls(root, CubeHeader.from_json(f.read()))
 
     # --- write ---------------------------------------------------------
-    def _long_df(
-        self, spark: SparkSession, data: np.ndarray, t_offset: int = 0
-    ) -> DataFrame:
-        """HxWxT array → long-form DataFrame (driver-side; test-scale
-        ingest). Production ingest arrives pre-distributed — see
-        sources/geotiff.py (binaryFile → decode batches)."""
+    def _write_arrays(self, data: np.ndarray, t_offset: int) -> None:
+        """Write dates ``[t_offset, t_offset + T)`` of the HxWxT array
+        ``data`` from the driver, one snappy parquet file per touched
+        (frac_num, time_chunk) partition, with no Spark job.
+
+        Rows are typed by ``header.columns`` (extra stored columns are
+        NULL) and ordered (y, x, t). A chunk that starts below
+        ``t_offset`` (the ragged tail of an append) keeps its stored rows
+        with ``t < header.ndates``, every stored column included; rows at
+        or past the header's axis, left by an append that crashed before
+        its header save, are dropped rather than duplicated.
+
+        Each partition is built, written to ``{root}/_staging`` and
+        released before the next, so driver memory stays bounded by one
+        partition and a failure leaves ``data/`` untouched. Then the staged
+        partitions replace theirs by directory rename — the whole
+        ``data/`` directory when ``t_offset == 0`` — and staging is
+        removed. A crash between the two renames of a swap leaves the old
+        copy under staging; the next write moves it back first.
+        """
         h = self.header
-        assert data.shape[0] == h.height and data.shape[1] == h.width
+        if data.shape[:2] != (h.height, h.width):
+            raise ValueError(
+                f"array shape {data.shape} does not match the {h.height}x{h.width} grid"
+            )
+        schema = to_arrow_schema(DataType.fromDDL(_ddl(h.columns)))
+        stage = os.path.join(self.root, "_staging")
+        staged, aside, old_table = (os.path.join(stage, n) for n in ("data", "old", "table"))
+        # undo a swap cut short between its two renames
+        if os.path.isdir(old_table) and not os.path.exists(self.data_path):
+            os.rename(old_table, self.data_path)
+        for d in glob.glob(os.path.join(aside, "frac_num=*", "time_chunk=*")):
+            dest = os.path.join(self.data_path, os.path.relpath(d, aside))
+            if not os.path.exists(dest):
+                _move(d, dest)
+        shutil.rmtree(stage, ignore_errors=True)
+        os.makedirs(staged)
+        t_end = t_offset + data.shape[2]
+        parts = [
+            (frac, chunk)
+            for frac in range(h.num_fracs)
+            for chunk in range(t_offset // h.frac_ndates, (t_end - 1) // h.frac_ndates + 1)
+        ]
+        try:
+            for frac, chunk in parts:
+                table = self._partition_rows(data, t_offset, frac, chunk, schema)
+                os.makedirs(_part(staged, frac, chunk))
+                pq.write_table(
+                    table,
+                    os.path.join(_part(staged, frac, chunk), "part-00000.snappy.parquet"),
+                    compression="snappy",
+                )
+                del table  # free it before the next partition is built
+            if t_offset == 0:
+                if os.path.exists(self.data_path):
+                    os.rename(self.data_path, old_table)
+                _move(staged, self.data_path)
+            else:
+                for frac, chunk in parts:
+                    dest = _part(self.data_path, frac, chunk)
+                    if os.path.exists(dest):
+                        _move(dest, _part(aside, frac, chunk))
+                    _move(_part(staged, frac, chunk), dest)
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+
+    def _partition_rows(
+        self, data: np.ndarray, t_offset: int, frac: int, chunk: int, schema: pa.Schema
+    ) -> pa.Table:
+        """One partition's rows: ``data``'s block for (frac, chunk) in
+        meshgrid (y, x, t) order, merged with the stored rows below
+        ``t_offset`` when the chunk starts there."""
+        h = self.header
+        x1, x2, y1, y2 = h.frac_xyranges(frac)
+        t1 = max(chunk * h.frac_ndates, t_offset)
+        t2 = min((chunk + 1) * h.frac_ndates, t_offset + data.shape[2])
         ys, xs, ts = np.meshgrid(
-            np.arange(h.height), np.arange(h.width), np.arange(data.shape[2]),
+            np.arange(y1, y2, dtype=np.int32),
+            np.arange(x1, x2, dtype=np.int32),
+            np.arange(t1, t2, dtype=np.int32),
             indexing="ij",
         )
-        t_abs = (ts + t_offset).ravel().astype(np.int32)
-        flat = {
-            "frac_num": (
-                (ys // h.frac_height) * h.num_x_fracs + (xs // h.frac_width)
-            ).ravel().astype(np.int32),
-            "time_chunk": (t_abs // h.frac_ndates).astype(np.int32),
-            "x": xs.ravel().astype(np.int32),
-            "y": ys.ravel().astype(np.int32),
-            "t": t_abs,
-            h.value_col: data.ravel(),
-        }
-        import pandas as pd
-
-        return spark.createDataFrame(pd.DataFrame(flat), schema=h.long_schema)
+        cols = {"x": xs.ravel(), "y": ys.ravel(), "t": ts.ravel()}
+        cols[h.value_col] = data[y1:y2, x1:x2, t1 - t_offset : t2 - t_offset].ravel()
+        table = pa.table(
+            [
+                pa.array(cols[f.name]).cast(f.type) if f.name in cols else pa.nulls(ts.size, f.type)
+                for f in schema
+            ],
+            schema=schema,
+        )
+        stored = _part(self.data_path, frac, chunk)
+        if t1 == chunk * h.frac_ndates or not os.path.isdir(stored):
+            return table
+        old = pq.read_table(stored, schema=schema)
+        merged = pa.concat_tables([old.filter(pc.less(old["t"], h.ndates)), table])
+        return merged.take(np.lexsort([merged[c].to_numpy() for c in ("t", "x", "y")]))
 
     def write_long(
         self, spark: SparkSession, df: DataFrame, zorder: bool = False
@@ -307,10 +399,15 @@ class RasterCube:
         self.save_header()
 
     def write_arrays(self, spark: SparkSession, data: np.ndarray) -> None:
-        """Full-grid write (S10; reference jgrid3.py:444-457 write_all).
-        One output file per (frac_num, time_chunk) partition."""
+        """Full-grid write (S10; reference jgrid3.py:444-457 write_all):
+        replaces the whole table with one parquet file per
+        (frac_num, time_chunk) partition, written from the driver without
+        a Spark job (see ``_write_arrays``). The header's stored columns
+        become the plain pixel columns."""
         assert data.shape[2] == self.header.ndates
-        self.write_long(spark, self._long_df(spark, data))
+        self.header.columns = self.header.pixel_columns()
+        self._write_arrays(data, t_offset=0)
+        self.save_header()
 
     def append_dates(
         self,
@@ -320,9 +417,13 @@ class RasterCube:
     ) -> bool:
         """Idempotent time-append (D2; reference
         scripts/complete_ndvi_worldgrid.py:59-186): extend the time axis by
-        ``data.shape[2]`` dates, rewriting ONLY the affected trailing/new
-        time_chunk partitions (dynamic partition overwrite). Re-running the
-        same append is detected via the header and is a no-op.
+        ``data.shape[2]`` dates, rewriting ONLY the trailing/new time_chunk
+        partitions, one file each, from the driver with no Spark job (see
+        ``_write_arrays``). A ragged trailing chunk keeps its stored rows
+        and columns; the new dates' extra stored columns are NULL. The
+        header is saved last, so an append that crashed before it re-runs
+        cleanly; re-running a completed append is detected via the header
+        and is a no-op.
 
         Returns True if data was written, False if already applied.
         """
@@ -333,32 +434,7 @@ class RasterCube:
             and h.timestamps_ms[-len(new_timestamps_ms):] == list(new_timestamps_ms)
         ):
             return False  # append already applied → idempotent no-op
-        t_offset = h.ndates
-        touched = sorted(
-            {(t_offset + i) // h.frac_ndates for i in range(data.shape[2])}
-        )
-        new_df = self._long_df(spark, data, t_offset=t_offset)
-        # the first touched chunk may already hold rows (ragged tail):
-        # union them in so the partition rewrite is complete
-        first = touched[0]
-        if first * h.frac_ndates < t_offset:
-            existing = (
-                self.df(spark)
-                .where(F.col("time_chunk") == first)
-                .select(*new_df.columns)
-            )
-            new_df = existing.unionByName(new_df)
-        (
-            new_df.repartition("frac_num", "time_chunk")
-            .sortWithinPartitions("frac_num", "time_chunk", "y", "x", "t")
-            # per-write option, not session conf: a session-global dynamic
-            # mode would silently change every other writer's overwrite
-            # semantics (see write_long)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("frac_num", "time_chunk")
-            .parquet(self.data_path)
-        )
+        self._write_arrays(data, t_offset=h.ndates)
         h.timestamps_ms = list(h.timestamps_ms) + list(new_timestamps_ms)
         self.save_header()
         return True

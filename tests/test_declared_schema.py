@@ -10,6 +10,7 @@ table, so declaring it changes no value and no plan.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
@@ -143,6 +144,45 @@ def test_declared_equals_inferred_append_and_repair(spark, tmp_path):
     assert cube.repair_truncate(spark) == 1
     _assert_declared(spark, cube)
     assert cube.df(spark).where(F.col("t") >= cube.header.ndates).count() == 0
+
+
+def _typed(dtype: str, ndates: int, seed: int) -> np.ndarray:
+    rng = np.random.RandomState(seed)
+    if dtype == "float32":
+        return (rng.randint(-2000, 10001, size=(H, W, ndates)) / 7.0).astype(dtype)
+    hi = 256 if dtype == "uint8" else 10001
+    lo = 0 if dtype.startswith("u") else -2000
+    return rng.randint(lo, hi, size=(H, W, ndates)).astype(dtype)
+
+
+@pytest.mark.parametrize("dtype", ["int16", "uint8", "uint16", "float32"])
+def test_numpy_writers_layout_and_schema(spark, tmp_path, dtype):
+    """write_arrays, a ragged-chunk append and a new-chunk append run no
+    Spark job and leave one parquet file per partition, rows in (y, x, t)
+    order, the values written and the schema Spark would infer."""
+    import pyarrow.parquet as pq
+
+    cube = RasterCube(str(tmp_path / "cube"), _header(dtype))
+    want = [_typed(dtype, ND, seed=1)]
+    assert _jobs(spark, lambda: cube.write_arrays(spark, want[0])) == 0
+    for k in range(2):  # t=5 lands in ragged chunk 2, t=6 opens chunk 3
+        want.append(_typed(dtype, 1, seed=2 + k))
+        ts = [86_400_000 * (20 + k)]
+        assert _jobs(spark, lambda: cube.append_dates(spark, want[-1], ts)) == 0
+    assert cube.header.ndates == ND + 2
+    _assert_declared(spark, cube)
+    np.testing.assert_array_equal(
+        cube.load_slice_array(spark, (0, 0), (W, H)), np.concatenate(want, axis=2)
+    )
+
+    parts = glob.glob(os.path.join(cube.data_path, "frac_num=*", "time_chunk=*"))
+    assert len(parts) == cube.header.num_fracs * 4
+    for part in parts:
+        files = glob.glob(os.path.join(part, "*.parquet"))
+        assert len(files) == 1, part
+        t = pq.read_table(files[0], columns=["x", "y", "t"])
+        order = np.lexsort([t[c].to_numpy() for c in ("t", "x", "y")])
+        np.testing.assert_array_equal(order, np.arange(t.num_rows), err_msg=part)
 
 
 def test_header_without_columns_reads_pixel_columns():

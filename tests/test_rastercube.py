@@ -136,3 +136,167 @@ def test_repair_truncate(spark, cube, tmp_path):
     np.testing.assert_array_equal(got, data)
     # idempotent: second repair is a no-op
     assert c2.repair_truncate(spark) == 0
+
+
+# --- numpy appends: stored columns, crash retries ------------------------
+
+SMALL = 20  # a 20x20 cube of one fraction: 400 rows per date
+
+
+def _small_header(ndates: int = 3) -> CubeHeader:
+    return CubeHeader(
+        width=SMALL,
+        height=SMALL,
+        frac_width=SMALL,
+        frac_height=SMALL,
+        dtype="int16",
+        nodataval=NODATA,
+        frac_ndates=2,
+        timestamps_ms=[86_400_000 * (i + 1) for i in range(ndates)],
+    )
+
+
+def _small_data(ndates: int, seed: int) -> np.ndarray:
+    rng = np.random.RandomState(seed)
+    return rng.randint(-2000, 10001, size=(SMALL, SMALL, ndates)).astype(np.int16)
+
+
+def test_append_keeps_extra_stored_columns(spark, tmp_path):
+    """The ragged chunk's stored rows keep every stored column; the new
+    date's extra columns are NULL."""
+    import pandas as pd
+
+    base = _small_data(3, seed=1)
+    ys, xs, ts = np.meshgrid(
+        np.arange(SMALL), np.arange(SMALL), np.arange(3), indexing="ij"
+    )
+    rows = pd.DataFrame(
+        {
+            "frac_num": np.zeros(ys.size, np.int32),
+            "time_chunk": (ts.ravel() // 2).astype(np.int32),
+            "x": xs.ravel().astype(np.int32),
+            "y": ys.ravel().astype(np.int32),
+            "t": ts.ravel().astype(np.int32),
+            "value": base.ravel(),
+            "qa": (xs * 7 + ts).ravel().astype(np.int32),
+        }
+    )
+    c = RasterCube(str(tmp_path / "qa"), _small_header())
+    c.write_long(
+        spark,
+        spark.createDataFrame(rows, c.header.long_schema + ", `qa` int"),
+    )
+    extra = _small_data(1, seed=2)
+    assert c.append_dates(spark, extra, [86_400_000 * 4]) is True
+
+    df = RasterCube.open(c.root).df(spark)
+    t2 = df.where("t = 2")
+    assert t2.count() == SMALL * SMALL
+    assert t2.where("qa = x * 7 + 2").count() == SMALL * SMALL
+    t3 = df.where("t = 3")
+    assert t3.count() == SMALL * SMALL
+    assert t3.where("qa IS NULL").count() == SMALL * SMALL
+    np.testing.assert_array_equal(
+        c.load_slice_array(spark, (0, 0), (SMALL, SMALL)),
+        np.concatenate([base, extra], axis=2),
+    )
+
+
+def test_append_retried_after_crash_before_header_save(spark, tmp_path):
+    """Data committed, header not saved: reopening and re-running the
+    append rewrites the ragged chunk without duplicating the new date."""
+    c = RasterCube(str(tmp_path / "retry"), _small_header())
+    base = _small_data(3, seed=3)
+    c.write_arrays(spark, base)
+    with open(c.header_path) as f:
+        old_header = f.read()
+    extra = _small_data(1, seed=4)
+    assert c.append_dates(spark, extra, [86_400_000 * 4]) is True
+    with open(c.header_path, "w") as f:
+        f.write(old_header)
+
+    again = RasterCube.open(c.root)
+    assert again.append_dates(spark, extra, [86_400_000 * 4]) is True
+    assert again.df(spark).where("t = 3").count() == SMALL * SMALL
+    np.testing.assert_array_equal(
+        again.load_slice_array(spark, (0, 0), (SMALL, SMALL)),
+        np.concatenate([base, extra], axis=2),
+    )
+
+
+def test_append_failure_leaves_cube_unchanged(spark, tmp_path, monkeypatch):
+    """A write that fails while staging the second partition changes no
+    row and no header byte, leaves no staging directory, and the append
+    succeeds when retried."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    header = _small_header()
+    header.frac_width = header.frac_height = SMALL // 2  # 4 fractions
+    c = RasterCube(str(tmp_path / "fail"), header)
+    base = _small_data(3, seed=5)
+    c.write_arrays(spark, base)
+    before = sorted(c.df(spark).collect())
+    with open(c.header_path) as f:
+        header_before = f.read()
+
+    write_table = pq.write_table
+    calls = []
+
+    def failing(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise OSError("injected write failure")
+        return write_table(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", failing)
+    extra = _small_data(1, seed=6)
+    with pytest.raises(OSError, match="injected"):
+        c.append_dates(spark, extra, [86_400_000 * 4])
+    monkeypatch.undo()
+
+    with open(c.header_path) as f:
+        assert f.read() == header_before
+    assert sorted(os.listdir(c.root)) == ["data", "header.json"]
+    reopened = RasterCube.open(c.root)
+    assert sorted(reopened.df(spark).collect()) == before
+
+    assert reopened.append_dates(spark, extra, [86_400_000 * 4]) is True
+    np.testing.assert_array_equal(
+        reopened.load_slice_array(spark, (0, 0), (SMALL, SMALL)),
+        np.concatenate([base, extra], axis=2),
+    )
+
+
+def test_append_cut_between_swap_renames_is_undone(spark, tmp_path, monkeypatch):
+    """A partition moved aside whose replacement never landed is moved
+    back by the next write, which then completes the append."""
+    from rastercube_spark.sources import raster
+
+    c = RasterCube(str(tmp_path / "cut"), _small_header())
+    base = _small_data(3, seed=7)
+    c.write_arrays(spark, base)
+    before = sorted(c.df(spark).collect())
+
+    move = raster._move
+
+    def cut(src, dst):  # the old partition moves aside, then the process dies
+        move(src, dst)
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(raster, "_move", cut)
+    monkeypatch.setattr(raster.shutil, "rmtree", lambda *a, **k: None)
+    extra = _small_data(1, seed=8)
+    with pytest.raises(KeyboardInterrupt):
+        c.append_dates(spark, extra, [86_400_000 * 4])
+    monkeypatch.undo()
+
+    reopened = RasterCube.open(c.root)
+    assert reopened.header.ndates == 3
+    assert reopened.append_dates(spark, extra, [86_400_000 * 4]) is True
+    assert sorted(reopened.df(spark).where("t < 3").collect()) == before
+    np.testing.assert_array_equal(
+        reopened.load_slice_array(spark, (0, 0), (SMALL, SMALL)),
+        np.concatenate([base, extra], axis=2),
+    )
