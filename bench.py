@@ -252,8 +252,9 @@ def _pipeline_clean_corpus(spark, sf_dir):
     from rastercube_spark.operators.pipeline import clean_corpus
     from rastercube_spark.sources.tables import load
 
-    # drop persisted intermediates left by the previous timed sample of
-    # THIS composite (clean_corpus persists two stage boundaries)
+    # drop the previous timed sample's returned chunk relation:
+    # clean_corpus persists it and this composite never unpersists it,
+    # so the next sample's persist would otherwise reuse its cache
     spark.catalog.clearCache()
     docs = load(spark, sf_dir, "documents")
     eval_docs = docs.where(F.col("doc_id") < 10).select(

@@ -1,25 +1,30 @@
 """End-to-end corpus curation: the composition a training-data pipeline
 actually runs — exact dedup → MinHash-LSH near-dup clusters → keeper
-selection → repetition/quality filtering → (optional) benchmark
-decontamination → (optional) deterministic split assignment → cleaned
-corpus write.
+selection → quality filtering → (optional) benchmark decontamination →
+(optional) deterministic split assignment → (optional) training-sequence
+chunking.
 
 Each stage is one of the engine's verified operators; this module only
-composes them and reports what was dropped at each gate. Topology at
-100 TB: exact dedup is one shuffle on a 16-byte fingerprint; the LSH
-stages shuffle signatures/bands (never text pairs); decontamination
-broadcasts the eval shingle set and anti-joins a broadcast flagged-id
-set (the corpus is never re-shuffled — plan-asserted in
-tests/test_pipeline.py); split assignment is a pure column expression
-(zero exchanges — plan-asserted); the final write is one pass. Nothing
-here materializes on the driver except per-stage counts.
+composes them. It decides on one per-document relation: every input row
+gets its drop reason (exact duplicate, near duplicate, low quality,
+contaminated) or its split. One group-by over that relation yields every
+report count, and the output is its surviving rows. Topology at 100 TB:
+exact dedup is one shuffle of the corpus keyed on its 16-byte
+fingerprint (a window min of the id, no join back); the LSH stages
+shuffle signatures/bands (never text pairs); decontamination broadcasts
+the eval shingle set, and the flagged ids it finds (bounded by the eval
+set) are broadcast back, so the corpus is never re-shuffled
+(plan-asserted in tests/test_pipeline.py); split assignment and chunking
+are column expressions and a generator (zero exchanges — plan-asserted).
+Nothing here materializes on the driver except the flagged ids and the
+report counts. Every job runs on the caller's thread, under its job
+group.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from rastercube_spark.operators.dedup import (
     content_fingerprint,
@@ -30,7 +35,7 @@ from rastercube_spark.operators.dedup import (
 )
 from rastercube_spark.operators.graph import min_label_clusters
 from rastercube_spark.operators.sampling import split_assign
-from rastercube_spark.operators.text import quality_score
+from rastercube_spark.operators.text import chunk_documents, quality_score
 
 
 def clean_corpus(
@@ -46,246 +51,128 @@ def clean_corpus(
 ) -> tuple[DataFrame, dict[str, int]]:
     """Returns (cleaned docs DataFrame, per-stage report).
 
-    Keep rules: first copy of each exact fingerprint, keeper (min id) of
-    each near-dup cluster, quality score ≥ ``min_quality``; then, when
-    ``eval_docs`` is given, every document sharing any word
-    ``decontaminate_k``-gram with the benchmark set is dropped (qd4/qb1's
-    operator — run AFTER the quality gate, the order a real pipeline
-    uses: no point shingle-matching text the quality gate already
-    killed); when ``splits`` is given, the survivors get a
-    leakage-safe deterministic ``split`` column (qd7's operator) and the
-    report carries per-split counts; when ``chunk_tokens`` is given,
-    the output rows are TRAINING SEQUENCES instead of documents — each
-    surviving document chunked into fixed-size overlapping token
-    windows (qg1's operator, stride defaulting to ¾ of the window),
-    carrying doc_id/chunk_idx/n_tokens/chunk plus the split column when
-    both are requested — the make-sequences step that feeds qa6's
-    packing. The report gains ``chunks`` and ``chunk_tokens`` totals
-    (chunking is map-only: it adds ZERO shuffles to the pipeline).
+    Keep rules, applied in this order: first copy (min id) of each exact
+    fingerprint, keeper (min id) of each near-dup cluster, quality score
+    ≥ ``min_quality``; then, when ``eval_docs`` is given, every document
+    sharing any word ``decontaminate_k``-gram with the benchmark set is
+    dropped (qd4/qb1's operator, run over the quality survivors only).
+    When ``splits`` is given, the survivors get a leakage-safe
+    deterministic ``split`` column (qd7's operator) and the report
+    carries per-split counts; a split with no survivors is absent. When
+    ``chunk_tokens`` is given, the output rows are TRAINING SEQUENCES
+    instead of documents — each survivor chunked into fixed-size
+    overlapping token windows (qg1's operator, stride defaulting to ¾ of
+    the window), carrying doc_id/chunk_idx/n_tokens/chunk plus the split
+    column when both are requested — and the report gains ``chunks`` and
+    ``chunk_tokens`` totals.
 
-    The returned DataFrame is backed by a persisted intermediate (so the
-    caller's write doesn't re-run the LSH clustering);
-    ``cleaned.unpersist()`` after consuming it.
+    The decision is one per-document relation: the corpus with its
+    exact-keeper and quality flags, persisted once, joined to the
+    near-dup drop ids and the flagged ids. One group-by over it by
+    (drop reason, split) gives every report count; the output is its
+    surviving rows. The clusters and the flagged ids are materialized
+    before this returns, so an action on the document output re-reads
+    the corpus (one shuffle on the fingerprint) but never re-runs the
+    clustering or the decontamination; the chunked output is persisted
+    and already materialized by its totals. ``cleaned.unpersist()``
+    after consuming it leaves nothing ``clean_corpus`` cached.
     """
-    # Report counts ride SHARED single-pass aggregates instead of one
-    # action per stage (r14, guide §1/§5 — the composite was
-    # action-bound: every count is a fixed driver round-trip on top of
-    # trivial data), and every relation a later stage re-reads is
-    # persisted at its first materialization so no column expression is
-    # evaluated twice (quality_score used to run 3×, chunking 2×, and
-    # the fingerprint pass had its own full-corpus stats scan). Report
-    # actions with no mutual dependency are additionally submitted from
-    # a small driver thread pool (guide §2.6): Spark schedules
-    # concurrent jobs FIFO, so the later job's tasks back-fill executors
-    # the earlier job's tail leaves idle — report values are identical,
-    # only the action schedule changes (measured 8.9 → 4.5 s warm on
-    # the sf0.1 bench composite together with the flagged persist
-    # below).
-
-    # 1. exact dedup: keep the min id per normalized fingerprint. The
-    # keeper relation doubles as the decision table for the input/exact
-    # stats (n_input = Σ copies, n_exact = rows) — persisting it means
-    # the stats aggregate reads the tiny (doc_id, n_copies) relation
-    # instead of re-scanning + re-hashing the corpus (guide §8: decide
-    # on small rows).
-    keeper_w = (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            content_fingerprint(F.col(text_col)).alias("fp"),
+    exact = F.coalesce(
+        F.col(id_col) == F.min(id_col).over(Window.partitionBy("_fp")),
+        F.lit(False),
+    )
+    decided = (
+        docs.withColumn("_fp", content_fingerprint(F.col(text_col)))
+        .withColumn("_exact", exact)
+        .withColumn(
+            "_quality",
+            F.coalesce(quality_score(F.col(text_col)) >= min_quality, F.lit(False)),
         )
-        .groupBy("fp")
-        .agg(F.min("doc_id").alias("doc_id"), F.count("*").alias("_nc"))
-        .select("doc_id", "_nc")
+        .drop("_fp")
         .persist()
     )
-    # the stage relation is consumed by near-dup shingling AND the
-    # survivor anti-join — persist so neither consumer re-runs the
-    # upstream lineage (materialized by the CC pass below)
-    exact_kept = docs.join(
-        keeper_w.select("doc_id"),
-        docs[id_col] == keeper_w["doc_id"],
-        "left_semi",
-    ).persist()
 
-    # 2. near-dup clusters over the survivors (min_label_clusters is
-    # driver-iterative — it executes HERE); the fingerprint stats
-    # aggregate is independent of it, so it rides a second driver
-    # thread and back-fills the CC loop's idle executors (guide §2.6)
-    sh = shingles_df(exact_kept, id_col, text_col, k=3, distinct=False)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        fp_stats_f = pool.submit(
-            lambda: keeper_w.agg(
-                F.coalesce(F.sum("_nc"), F.lit(0)).alias("n_input"),
-                F.count(F.lit(1)).alias("n_exact"),
-            ).first()
+    # near-dup clusters over the exact keepers: every member but the
+    # cluster's min id is dropped. min_label_clusters is driver-iterative
+    # and returns a materialized relation, so the clustering runs once.
+    clusters = min_label_clusters(
+        lsh_bucket_star_edges(
+            minhash_signatures(
+                shingles_df(decided.where("_exact"), id_col, text_col, k=3, distinct=False)
+            )
         )
-        # CC input is bucket-STAR edges, not clique pairs (r15, guide
-        # §2.4): components — and therefore keeper labels and every
-        # report count — are identical (lsh_bucket_star_edges
-        # docstring), but the band self-join + DISTINCT pair dedup
-        # drop out of the composite's most expensive action.
-        clusters = min_label_clusters(
-            lsh_bucket_star_edges(minhash_signatures(sh))
-        )
-        fp_stats = fp_stats_f.result()
-    n_input, n_exact = fp_stats["n_input"], fp_stats["n_exact"]
-    drop = clusters.where(F.col("doc_id") != F.col("cluster_id")).select("doc_id")
-    near_kept = exact_kept.join(
-        drop, exact_kept[id_col] == drop["doc_id"], "left_anti"
-    ).persist()
+    )
+    near = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
+        F.col("doc_id").alias("_near")
+    )
+    rel = decided.join(near, decided[id_col] == near["_near"], "left")
+    drop = (
+        F.when(~F.col("_exact"), "dropped_exact_dup")
+        .when(F.col("_near").isNotNull(), "dropped_near_dup")
+        .when(~F.col("_quality"), "dropped_low_quality")
+    )
+    reasons = ["dropped_exact_dup", "dropped_near_dup", "dropped_low_quality"]
+    kept = rel.where(drop.isNull()).select(*docs.columns)
 
-    # 3. quality gate — persisted: every later stage (decontamination
-    # shingling, split counts, chunking) re-reads the survivors, and
-    # without the persist each re-read re-ran the quality regex pass
-    # and the anti-join above it (3× at the bench composite)
-    cleaned = near_kept.where(
-        quality_score(F.col(text_col)) >= min_quality
-    ).persist()
-    # handle to the persisted survivors (the `cleaned` name is
-    # re-bound to the anti-join plan below; unpersisting at the end of
-    # the chunk branch needs the persisted object itself)
-    _cleaned_persisted = cleaned
-
-    # one aggregate materializes the near_kept persist and yields BOTH
-    # stage counts (quality is a deterministic column expression); when
-    # decontamination is requested, the flagged-id scan is independent
-    # of it and runs concurrently (guide §2.6) — flagged is PERSISTED
-    # because it has two consumers (the count here and the broadcast
-    # anti-join below, re-built per downstream action): without the
-    # persist every later report action re-ran the whole decontaminate
-    # shingle pass (~1.5 s × 2 at the sf0.1 composite). It is bounded
-    # by the benchmark's size × its dup factor, never corpus-scale.
-    def _nn_agg():
-        return near_kept.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.when(
-                    quality_score(F.col(text_col)) >= min_quality, 1
-                ).otherwise(0)
-            ).alias("q"),
-        ).first()
-
-    flagged = None
     if eval_docs is not None:
-        flagged = decontaminate(
-            cleaned, eval_docs, id_col=id_col, text_col=text_col,
-            k=decontaminate_k,
-        ).select(F.col("doc_id").alias("_flag_id")).persist()
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            nn_f = pool.submit(_nn_agg)
-            n_flagged_f = pool.submit(flagged.count)
-            nn, n_flagged = nn_f.result(), n_flagged_f.result()
-    else:
-        nn = _nn_agg()
-    n_near, n_clean = nn["n"], nn["q"]
-    exact_kept.unpersist()
-    keeper_w.unpersist()
-
-    report = {
-        "input": n_input,
-        "dropped_exact_dup": n_input - n_exact,
-        "dropped_near_dup": n_exact - n_near,
-        "dropped_low_quality": n_near - n_clean,
-    }
-
-    # 4. benchmark decontamination (optional): anti-join the flagged
-    # ids computed above. BROADCAST: contaminated docs are leaks,
-    # bounded by the benchmark's own size times its dup factor, never
-    # corpus-scale — so the corpus relation is not re-shuffled by this
-    # stage (plan-asserted). flagged ⊆ cleaned and is one row per
-    # doc_id, so the dropped count IS the flagged count — counted above
-    # without touching the corpus relation again.
-    if eval_docs is not None:
-        cleaned = cleaned.join(
-            F.broadcast(flagged),
-            cleaned[id_col] == F.col("_flag_id"),
-            "left_anti",
+        # the flagged ids are bounded by the eval set (leaks, never
+        # corpus-scale): collect them and broadcast them back, so the
+        # corpus is joined without a shuffle and the shingle pass runs once
+        flag_ids = decontaminate(
+            kept, eval_docs, id_col=id_col, text_col=text_col, k=decontaminate_k
+        ).select("doc_id").collect()
+        flagged = F.broadcast(
+            docs.sparkSession.createDataFrame(
+                flag_ids,
+                StructType([StructField("_flag", docs.schema[id_col].dataType)]),
+            )
         )
-        report["dropped_contaminated"] = n_flagged
-        n_clean = n_clean - n_flagged
+        rel = rel.join(flagged, rel[id_col] == flagged["_flag"], "left")
+        drop = drop.when(F.col("_flag").isNotNull(), "dropped_contaminated")
+        reasons.append("dropped_contaminated")
+        kept = kept.join(flagged, kept[id_col] == flagged["_flag"], "left_anti")
 
-    report["kept"] = n_clean
-
-    # 5. split assignment (optional): a pure column expression — zero
-    # exchanges (plan-asserted), growth-stable and leakage-safe
-    # (operators/sampling.split_assign); the per-split counts join the
-    # report (3-row map-side-combinable agg, part of the deliverable).
-    # When chunking is ALSO requested, the counts action is deferred
-    # into the chunk branch so it runs concurrently with the chunk
-    # aggregate (guide §2.6) — same action, same values, same report
-    # key order.
-    def _split_counts():
-        return {
-            r["split"]: r["count"]
-            for r in cleaned.groupBy("split").count().collect()
-        }
-
+    split = F.lit(None).cast("string")
     if splits:
-        cleaned = split_assign(cleaned, splits, key=id_col)
-        if chunk_tokens is None:
-            report["split_counts"] = _split_counts()
+        # a pure column expression of the id: zero exchanges, and the
+        # report's split counts and the output rows agree by construction
+        rel = split_assign(rel, splits, key=id_col)
+        kept = split_assign(kept, splits, key=id_col)
+        split = F.col("split")
 
-    # 6. make training sequences (optional): chunk every survivor into
-    # fixed-size overlapping token windows (qg1's operator — map-only,
-    # no new shuffle; the contained-tail rule means no emitted chunk is
-    # a subset of its predecessor). Runs LAST so sequences inherit the
-    # document's split — chunking before splitting would let one
-    # document's windows straddle train/test, the leak split_assign
-    # exists to prevent.
+    counts = (
+        rel.groupBy(drop.alias("_drop"), F.when(drop.isNull(), split).alias("split"))
+        .count()
+        .collect()
+    )
+    n = {(r["_drop"], r["split"]): r["count"] for r in counts}
+    report = {"input": sum(n.values())}
+    report.update({k: n.get((k, None), 0) for k in reasons})
+    report["kept"] = sum(c for (d, _), c in n.items() if d is None)
+    if splits:
+        report["split_counts"] = {s: n[None, s] for s, _ in splits if (None, s) in n}
+
     if chunk_tokens is not None:
-        from rastercube_spark.operators.text import chunk_documents
-
-        stride = chunk_stride or max(1, (chunk_tokens * 3) // 4)
-        chunks = chunk_documents(
-            cleaned, max_tokens=chunk_tokens, stride=stride,
-            id_col=id_col, text_col=text_col,
+        # runs LAST so sequences inherit the document's split — chunking
+        # before splitting would let one document's windows straddle
+        # train/test. split_assign is a pure function of the doc id, so
+        # re-applying it to the chunk rows reproduces each document's
+        # split exactly, with no join back to the corpus.
+        kept = chunk_documents(
+            kept,
+            max_tokens=chunk_tokens,
+            stride=chunk_stride or max(1, (chunk_tokens * 3) // 4),
+            id_col=id_col,
+            text_col=text_col,
         )
         if splits:
-            # split_assign is a pure column expression of the doc id, so
-            # re-applying it to the chunk rows reproduces each document's
-            # split EXACTLY — no join back to the corpus (a doc_id-keyed
-            # join here would be the stage's only shuffle)
-            chunks = split_assign(chunks, splits, key="doc_id")
-        # persist BEFORE the report aggregate: the agg materializes the
-        # chunk relation, so the caller's write (and the bench's sink)
-        # reads it back instead of re-running the chunker over the
-        # corpus — the same contract the docstring already promises for
-        # the cleaned relation ("the caller's write doesn't re-run the
-        # LSH clustering"); unpersist after consuming.
-        chunks = chunks.persist()
-
-        def _tot_agg():
-            return chunks.agg(
-                F.count("*").alias("n"),
-                F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t"),
-            ).first()
-
-        if splits:
-            # deferred split counts ∥ chunk totals (guide §2.6):
-            # independent aggregates over the persisted survivors /
-            # chunk relations
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                sp_f = pool.submit(_split_counts)
-                tot_f = pool.submit(_tot_agg)
-                report["split_counts"], tot = sp_f.result(), tot_f.result()
-        else:
-            tot = _tot_agg()
+            kept = split_assign(kept, splits, key="doc_id")
+        kept = kept.persist()
+        tot = kept.agg(
+            F.count("*").alias("n"),
+            F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t"),
+        ).first()
         report["chunks"] = tot["n"]
         report["chunk_tokens"] = tot["t"]
-        # the chunk relation is materialized (persisted + aggregated
-        # above), so its upstream persists have served their last
-        # consumer — release them (r15, VERDICT r14 #3: `flagged`
-        # leaked per pipeline run in a long-lived session; near_kept
-        # and the pre-anti-join quality survivors were held for the
-        # same already-materialized lineage)
-        near_kept.unpersist()
-        _cleaned_persisted.unpersist()
-        if flagged is not None:
-            flagged.unpersist()
-        return chunks, report
-    # document-level return: the caller's actions re-read the persisted
-    # quality survivors through the (cheap, re-built per action)
-    # broadcast anti-join, so `flagged` and the persists above stay live
-    # as part of the returned relation's lineage; the docstring contract
-    # ("cleaned.unpersist() after consuming") covers the rest.
-    return cleaned, report
+    decided.unpersist()
+    return kept, report

@@ -30,7 +30,7 @@ def get_spark(
     """Create (or fetch) a SparkSession with engine defaults.
 
     On a real cluster, only ``master`` and sizing confs change; the
-    semantic confs (AQE, Arrow, UTC, partition-overwrite) stay.
+    semantic confs (AQE, Arrow, UTC) stay.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -43,12 +43,6 @@ def get_spark(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        # An "overwrite" of a partitioned table replaces only the
-        # partitions the new rows touch. The one engine writer that still
-        # runs under this session default is similarity.save_ann_index's
-        # partitionBy("cid") codes write; the cube's Spark writers set
-        # their mode per write, and its numpy writers do not use Spark.
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # ~128 MB scan splits, mirroring the reference's one-fraction ≈
         # one-HDFS-block layout target (grids.py:115-123).
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -176,3 +176,33 @@ def test_out_of_package_imports_resolve():
                     missing.append(f"{rel}:{node.lineno} {node.module}.{alias.name}")
     assert not missing, missing
     assert resolved > 50, resolved
+
+
+def test_no_driver_threads_in_package():
+    """No module in the package imports ``concurrent.futures`` or
+    ``threading``. A Spark job started from a plain Python thread loses
+    the caller's job group and local properties, so Spark's status store
+    can no longer attribute it to the query that ran it."""
+    import ast
+    import glob
+
+    banned = ("concurrent.futures", "threading")
+    found = []
+    for path in sorted(glob.glob(os.path.join(PKG, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                mod = node.module or ""
+                names = [mod] + [f"{mod}.{a.name}" for a in node.names]
+            else:
+                continue
+            if any(n == b or n.startswith(b + ".") for n in names for b in banned):
+                found.append(f"{os.path.relpath(path, REPO)}:{node.lineno}")
+    assert not found, (
+        f"driver-side threads in {found}: run Spark actions on the caller's "
+        "thread, or start the thread as pyspark.InheritableThread so it "
+        "keeps the caller's job group and local properties"
+    )

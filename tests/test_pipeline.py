@@ -3,6 +3,10 @@ that the pipeline actually removes planted duplicates."""
 
 from __future__ import annotations
 
+import hashlib
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from rastercube_spark.operators.pipeline import clean_corpus
@@ -44,10 +48,10 @@ def test_clean_corpus_removes_planted_dups(spark, sf_dir):
 
 
 def test_clean_corpus_full_curation_flow(spark, sf_dir):
-    """r9: the extended composition — decontamination + split assignment
-    after the quality gate (the order a real pipeline runs). Checks the
-    stage arithmetic extends, planted eval leaks are dropped, every
-    survivor carries a split, and splits are deterministic."""
+    """Decontamination and split assignment run after the quality gate
+    (the order a real pipeline runs): the stage arithmetic extends,
+    planted eval leaks are dropped, every survivor carries a split, and
+    splits are deterministic."""
     docs = load(spark, sf_dir, "documents")
     # the benchmark set: 10 real docs (their near-copies in the corpus
     # are the planted leaks the decontamination stage must catch)
@@ -87,11 +91,10 @@ def test_clean_corpus_full_curation_flow(spark, sf_dir):
 
 
 def test_clean_corpus_extension_adds_no_corpus_shuffle(spark, sf_dir):
-    """Plan assertion for the r9 composition claim: relative to the
-    3-stage pipeline, decontamination must join the corpus via
-    BROADCAST (never a corpus-side sort-merge/shuffled-hash anti-join)
-    and split assignment must add ZERO exchanges — i.e. the extended
-    flow introduces no new corpus-wide shuffle beyond its components."""
+    """Relative to the 3-stage pipeline, decontamination joins the
+    corpus via BROADCAST (never a corpus-side sort-merge/shuffled-hash
+    anti-join) and split assignment adds ZERO exchanges: the extended
+    flow introduces no corpus-wide shuffle beyond its components."""
     docs = load(spark, sf_dir, "documents").limit(120)
     eval_docs = docs.where(F.col("doc_id") < 5).select(
         (F.col("doc_id") + 900000).alias("doc_id"), "text"
@@ -120,8 +123,8 @@ def test_clean_corpus_extension_adds_no_corpus_shuffle(spark, sf_dir):
 
 def test_chunk_documents_window_arithmetic(spark):
     """10 tokens at max=4/stride=3 → starts 1,4,7 only: the window at
-    s=7 covers tokens 7–10, so the contained s=10 start is suppressed
-    (ADVICE r12); 11 tokens gets the genuine short tail. stride==max
+    s=7 covers tokens 7–10, so the contained s=10 start is suppressed;
+    11 tokens gets the genuine short tail. stride==max
     partitions with no overlap."""
     from rastercube_spark.operators.text import chunk_documents
 
@@ -331,7 +334,7 @@ def test_dup_cluster_histogram_planted_clusters(spark):
 
 
 def test_clean_corpus_emits_training_sequences(spark, sf_dir):
-    """r13: the make-sequences stage — chunk_tokens turns the pipeline
+    """The make-sequences stage — chunk_tokens turns the pipeline
     output into training sequences: every chunk's parent survived the
     gates, token totals are consistent, each sequence inherits its
     document's split EXACTLY (split_assign re-applied to chunk rows —
@@ -361,10 +364,9 @@ def test_clean_corpus_emits_training_sequences(spark, sf_dir):
     # re-applied split expression, exactly what clean_corpus composes)
     # on the document-level output and compare UNEXECUTED plans — one
     # extra Generate (the position explode), zero extra Exchanges.
-    # (r15: the old comparison read the EXECUTED plans and truncated at
-    # the first "== Initial Plan ==" marker, which nested cached
-    # relations move around depending on what ran first — unexecuted
-    # plans make the same claim deterministically.)
+    # Unexecuted plans, because nested cached relations move the
+    # "== Initial Plan ==" marker of an executed plan around depending
+    # on what ran first.
     from rastercube_spark.operators.sampling import split_assign
     from rastercube_spark.operators.text import chunk_documents
 
@@ -387,12 +389,10 @@ def test_clean_corpus_emits_training_sequences(spark, sf_dir):
 def test_clean_corpus_report_deterministic_under_concurrent_actions(
     spark, sf_dir
 ):
-    """r14 entry 10 pins: the report actions now run from a driver
-    thread pool (fingerprint stats ∥ CC loop, quality agg ∥ flagged
-    count, split counts ∥ chunk totals) and the flagged relation is
-    persisted — none of which may change a single report value. Two
-    full runs with every optional stage enabled must produce the
-    IDENTICAL report dict (values and key order)."""
+    """The report is a pure function of the input: two full runs with
+    every optional stage enabled in one session, the second planned
+    while the first one's output is still live, produce the IDENTICAL
+    report dict (values and key order)."""
     docs = load(spark, sf_dir, "documents")
     eval_docs = docs.where(F.col("doc_id") < 10).select(
         (F.col("doc_id") + 900000).alias("doc_id"), "text"
@@ -407,7 +407,7 @@ def test_clean_corpus_report_deterministic_under_concurrent_actions(
     assert rep1 == rep2
     assert list(rep1) == list(rep2)
     # key order is part of the report contract (split_counts before
-    # the chunk totals even though its action is deferred for overlap)
+    # the chunk totals, though the totals come from a second aggregate)
     assert list(rep1) == [
         "input",
         "dropped_exact_dup",
@@ -421,3 +421,151 @@ def test_clean_corpus_report_deterministic_under_concurrent_actions(
     ]
     for df in (out1, out2):
         df.unpersist()
+
+
+# --- pinned reports, cache and job-group contract ----------------------------
+
+_SPLITS = [("train", 0.8), ("val", 0.1), ("test", 0.1)]
+_OPTION_SETS = ("default", "eval", "eval_splits", "all")
+
+
+def _options(docs, name):
+    """The four option sets: each adds one optional stage to the last."""
+    eval_docs = docs.where(F.col("doc_id") < 10).select(
+        (F.col("doc_id") + 900000).alias("doc_id"), "text"
+    )
+    return {
+        "default": {},
+        "eval": dict(eval_docs=eval_docs),
+        "eval_splits": dict(eval_docs=eval_docs, splits=_SPLITS),
+        "all": dict(eval_docs=eval_docs, splits=_SPLITS, chunk_tokens=128),
+    }[name]
+
+
+def _planted(docs):
+    """The first 60 documents plus a whitespace variant of doc 3 under a
+    new id: one exact duplicate."""
+    dup = docs.where(F.col("doc_id") == 3).select(
+        (F.col("doc_id") + 100000).alias("doc_id"),
+        F.concat(F.lit("  "), F.col("text")).alias("text"),
+        "lang", "source", "n_chars",
+    )
+    return docs.where(F.col("doc_id") < 60).unionByName(dup)
+
+
+def _digest(df):
+    rows = sorted(repr(tuple(r)) for r in df.collect())
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16], len(rows)
+
+
+def _report(dropped_near, dropped_quality, contaminated=None, splits=None,
+            chunks=None, n_input=500, dropped_exact=0):
+    rep = {
+        "input": n_input,
+        "dropped_exact_dup": dropped_exact,
+        "dropped_near_dup": dropped_near,
+        "dropped_low_quality": dropped_quality,
+    }
+    kept = n_input - dropped_exact - dropped_near - dropped_quality
+    if contaminated is not None:
+        rep["dropped_contaminated"] = contaminated
+        kept -= contaminated
+    rep["kept"] = kept
+    if splits is not None:
+        rep["split_counts"] = splits
+    if chunks is not None:
+        rep["chunks"], rep["chunk_tokens"] = chunks
+    return rep
+
+
+# report and (sorted-row digest, rows) of every option set, per fixture
+# scale; recorded before clean_corpus was rebuilt on one decision relation
+_PINNED = {
+    "sf0.001": {
+        "default": (_report(24, 13), ("7631a6570d338933", 463)),
+        "eval": (_report(24, 13, 10), ("1b5f4271b01f3da7", 453)),
+        "eval_splits": (
+            _report(24, 13, 10, {"train": 369, "val": 42, "test": 42}),
+            ("944d7ec86d4fa303", 453),
+        ),
+        "all": (
+            _report(24, 13, 10, {"train": 369, "val": 42, "test": 42}, (453, 25781)),
+            ("5fe78557aac63956", 453),
+        ),
+        "planted": (
+            _report(2, 3, n_input=61, dropped_exact=1), ("f2142af9d80508b7", 55)
+        ),
+    },
+    "sf0.01": {
+        "default": (_report(24, 18), ("b7d7586c32768edb", 458)),
+        "eval": (_report(24, 18, 10), ("01093f1afd559d8b", 448)),
+        "eval_splits": (
+            _report(24, 18, 10, {"train": 366, "val": 41, "test": 41}),
+            ("10418ab0b619acc6", 448),
+        ),
+        "all": (
+            _report(24, 18, 10, {"train": 366, "val": 41, "test": 41}, (448, 25134)),
+            ("149488708424ed0b", 448),
+        ),
+        "planted": (
+            _report(0, 3, n_input=61, dropped_exact=1), ("dbfa4cbdd6326a02", 57)
+        ),
+    },
+}
+
+
+@pytest.mark.parametrize("name", _OPTION_SETS + ("planted",))
+def test_clean_corpus_pinned_report_and_rows(spark, sf_dir, name):
+    """Every option set reproduces its recorded report (values, key
+    order, and split_counts in the order ``splits`` names them) and its
+    exact output rows."""
+    pinned = _PINNED.get(os.path.basename(os.path.normpath(sf_dir)))
+    if pinned is None:
+        pytest.skip(f"no pinned clean_corpus record for {sf_dir}")
+    docs = load(spark, sf_dir, "documents")
+    if name == "planted":
+        out, report = clean_corpus(_planted(docs))
+    else:
+        out, report = clean_corpus(docs, **_options(docs, name))
+    want_report, want_rows = pinned[name]
+    assert report == want_report
+    assert list(report) == list(want_report)
+    if "split_counts" in report:
+        assert list(report["split_counts"]) == list(want_report["split_counts"])
+    assert _digest(out) == want_rows
+    out.unpersist()
+
+
+def test_clean_corpus_absent_split_stays_absent(spark, sf_dir):
+    """A split no survivor draws is left out of split_counts, never
+    reported as 0."""
+    docs = load(spark, sf_dir, "documents").limit(40)
+    out, report = clean_corpus(docs, splits=[("train", 1.0), ("never", 0.0)])
+    assert report["split_counts"] == {"train": report["kept"]}
+    out.unpersist()
+
+
+@pytest.mark.parametrize("name", _OPTION_SETS)
+def test_clean_corpus_leaves_no_cache_and_keeps_job_group(spark, sf_dir, name):
+    """Run three times in one session: after the caller unpersists the
+    returned relation, the cache manager is empty again, and every job
+    clean_corpus (and the caller's action on its output) started carries
+    the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    docs = load(spark, sf_dir, "documents")
+    spark.catalog.clearCache()
+    group = f"clean-corpus-{name}"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    try:
+        sc.setJobGroup(group, "clean_corpus contract test")
+        for _ in range(3):
+            out, report = clean_corpus(docs, **_options(docs, name))
+            assert out.count() == report.get("chunks", report["kept"])
+            out.unpersist()
+            assert cache.isEmpty()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+    assert tracker.getJobIdsForGroup(group)

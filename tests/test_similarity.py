@@ -888,3 +888,25 @@ def test_ann_degenerate_inputs(spark, fn, shape):
             _KNN[fn](queries, corpus)
         return
     assert _KNN[fn](queries, corpus).collect() == []
+
+
+def test_save_ann_index_resave_replaces_codes(spark, tmp_path):
+    """Re-saving an index at one path with fewer coarse lists replaces
+    the whole codes table: none of the earlier build's ``cid=``
+    partitions survive next to the new quantizers."""
+    import os
+
+    from rastercube_spark.operators.similarity import (
+        load_ann_index,
+        save_ann_index,
+    )
+
+    corpus = _vectors(spark, 400, "vec_id", "embedding")
+    idx = str(tmp_path / "ann_index")
+    save_ann_index(corpus, idx, dim=_DIM, n_coarse=8, m=4, n_cents=8)
+    save_ann_index(corpus, idx, dim=_DIM, n_coarse=2, m=4, n_cents=8)
+    enc, meta = load_ann_index(spark, idx)
+    assert meta["n_coarse"] == 2
+    assert enc.count() == 400
+    cids = {d for d in os.listdir(os.path.join(idx, "codes")) if d.startswith("cid=")}
+    assert cids and cids <= {"cid=0", "cid=1"}

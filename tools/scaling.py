@@ -844,6 +844,9 @@ def _pipeline_composite(spark: SparkSession, docs: DataFrame) -> DataFrame:
     leaks), 80/10/10 split, 128-token chunks."""
     from rastercube_spark.operators.pipeline import clean_corpus
 
+    # the previous sample's returned chunk relation is still persisted
+    # (the leg never unpersists it); without this the next sample would
+    # read its cache
     spark.catalog.clearCache()
     eval_docs = docs.where(F.col("doc_id") < 100).select(
         (F.col("doc_id") + 90_000_000).alias("doc_id"), "text"
